@@ -276,6 +276,11 @@ def q_silver_transform(spark, staged_path: str):
     )
 
 
+def _cpus() -> str:
+    """Local core count: $SPARK_GRAFT_CPUS, else this process's CPU set."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+
+
 def _make_spark(cpus: str):
     spark = get_spark(
         app_name="iowa-engine-bench",
@@ -352,7 +357,7 @@ def run_cohort(cohort: str) -> None:
     """Child mode: one JVM, one cohort. Prints a single JSON line with
     this cohort's timings + stage splits (parent merges)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     spark = _make_spark(cpus)
     queries = entry_mod.queries()
     timings: dict[str, float] = {}
@@ -571,7 +576,7 @@ def main() -> None:
         for c, w in cohort_walls.items()
         if quiet_walls.get(c) and w > 1.5 * quiet_walls[c]
     )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(_cpus())
     detail = dict(full)
     detail["cpus"] = cpus
     detail["cohorts"] = {k: len(v) for k, v in COHORTS.items()}

@@ -10,15 +10,16 @@ the sharded oracle sweep, one bench cohort JVM) those per-call pins
 accumulate as executor-storage pressure — the round-10 verdict names
 this as the likely root cause of the documented intra-JVM bench drift.
 
-The contract here (round-11 verdict item 3):
+What the code does today:
 
 - operators call :func:`pin` instead of bare ``.persist()``; semantics
-  inside the query are identical (same storage level, same reuse);
-- whoever materializes the query's output calls :func:`release_pinned`
-  afterwards — ``__spark_entry__.queries()`` wraps every query callable
-  to release the PREVIOUS query's pins on entry (by then the caller has
-  materialized that query's result), ``bench.py`` releases after every
-  timed rep, and the oracle harness releases after each comparison.
+  inside the query are identical (same storage level, same reuse), and
+  the relation is appended to ``_PINNED``;
+- :func:`release_pinned` unpersists everything in ``_PINNED``, but
+  nothing calls it yet: the entry, ``bench.py`` and the oracle harness
+  leave pins in place, so ``_PINNED`` grows for the life of the process;
+- ``perfbench/run.py`` reads ``len(_PINNED)`` after each pass as its
+  ``caching.pinned_after_pass`` metric.
 
 Releasing is always CORRECT regardless of timing: ``unpersist`` is a
 hint, and a consumer that re-runs after release simply recomputes.

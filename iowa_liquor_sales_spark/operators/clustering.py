@@ -269,9 +269,9 @@ def grid_dbscan(
     # drag the big pair relation through an exchange + sort per join.
     # One O(n) count of the input decides: broadcast the point-sized
     # sides when they fit, keep the shuffle plan for huge inputs.
-    from .graph import _BCAST_ROW_CAP
+    from .graph import broadcast_hint
 
-    hint = F.broadcast if p.count() <= _BCAST_ROW_CAP else (lambda d: d)
+    hint = broadcast_hint(p.count())
     cores = flags.filter("is_core").select(F.col("pid").alias("cid"))
     core_edges = (
         nbrs.join(hint(cores), nbrs["pid"] == cores["cid"])

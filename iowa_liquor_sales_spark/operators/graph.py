@@ -27,21 +27,23 @@ the judge can check semantics against a recursive-CTE oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from iowa_liquor_sales_spark.caching import pin
 
 # Row cap for the measured-count broadcast decisions below (and in
-# grid_dbscan, which imports it): node-map relations are a handful of
-# ids + one label each (~50 B/row framed), so 2M rows is ~100 MB built —
-# comfortable on any executor profile this engine targets while staying
-# far under Spark's 8 GB / 512M-row broadcast hard cap. Production
-# clusters with smaller executors can lower it via env without touching
-# code; 0 disables the broadcast arm entirely.
-_BCAST_ROW_CAP = int(os.environ.get("IOWA_GRAPH_BROADCAST_ROWS", "2000000"))
+# grid_dbscan): node-map relations are a handful of ids + one label
+# each (~50 B/row framed), so 2M rows is ~100 MB built — comfortable on
+# any executor profile this engine targets while staying far under
+# Spark's 8 GB / 512M-row broadcast hard cap.
+_BCAST_ROW_CAP = 2_000_000
+
+
+def broadcast_hint(rows: int):
+    """``F.broadcast`` when a measured row count fits under
+    ``_BCAST_ROW_CAP``, else the identity (keep the shuffle plan)."""
+    return F.broadcast if rows <= _BCAST_ROW_CAP else (lambda df: df)
 
 
 def connected_components(
@@ -122,8 +124,7 @@ def connected_components(
     # already materialized, so counting it is nearly free — broadcast
     # both mapping joins when the node map fits comfortably in memory,
     # keep the shuffle plan for genuinely huge node sets.
-    small_m = m.count() <= _BCAST_ROW_CAP
-    hint = F.broadcast if small_m else (lambda d: d)
+    hint = broadcast_hint(m.count())
     hubs = (
         sym.join(hint(m.select("a", F.col("hub").alias("ha"))), "a")
         .select(F.col("b"), F.col("ha"))
@@ -237,8 +238,7 @@ def pagerank_e12(
     )
     deg = e0.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     e = e0.join(deg, "s").localCheckpoint(eager=True)
-    small_v = nodes.count() <= _BCAST_ROW_CAP
-    hint = F.broadcast if small_v else (lambda rel: rel)
+    hint = broadcast_hint(nodes.count())
     ranks = nodes.withColumn("rank_e12", F.lit(10**12).cast("long"))
     for i in range(iters):
         contrib = (
@@ -318,11 +318,7 @@ def pagerank_personalized_e12(
         F.sum(F.col("w").cast("decimal(38,0)")).alias("wsum")
     )
     e = e0.join(wsum, "s").localCheckpoint(eager=True)
-    hint = (
-        F.broadcast
-        if nodes.count() <= _BCAST_ROW_CAP
-        else (lambda rel: rel)
-    )
+    hint = broadcast_hint(nodes.count())
     seed = F.col("node").isin(*sources)
     teleport = F.when(
         seed, F.lit((15 * 10**12) // (100 * n_s)).cast("long")
@@ -736,11 +732,7 @@ def boruvka_mst_rounds(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    vhint = (
-        F.broadcast
-        if labels.count() <= _BCAST_ROW_CAP
-        else (lambda rel: rel)
-    )
+    vhint = broadcast_hint(labels.count())
     chosen_all = None
     for _ in range(rounds):
         cand = (
@@ -1909,10 +1901,7 @@ def betweenness_sample(
         F.col("a").alias("u"), F.col("b").alias("w")
     ).unionAll(und.select(F.col("b").alias("u"), F.col("a").alias("w")))
     adj = adj.repartition(F.col("u")).localCheckpoint(eager=True)
-    small = (
-        adj.count() * max(1, len(sources)) <= _BCAST_ROW_CAP
-    )
-    hint = F.broadcast if small else (lambda rel: rel)
+    hint = broadcast_hint(adj.count() * max(1, len(sources)))
 
     spark = edges.sparkSession
     frontier = spark.createDataFrame(

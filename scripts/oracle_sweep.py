@@ -3,17 +3,17 @@
 oracle on a PLAIN default SparkSession (ANSI on, 200 shuffle partitions —
 the external driver's environment, NOT the tuned engine factory).
 
-    python scripts/oracle_sweep.py [sf_dir] [--shards N]
+    python scripts/oracle_sweep.py [sf_dir] [--shards N] [q_name ...]
 
-Default sf_dir /root/testdata/sf0.01; default shards 4 (override with
---shards or ORACLE_SWEEP_SHARDS). Shard i of N checks
-``sorted(queries)[i::N]`` — a deterministic shard->query map, same
-frozen-list discipline as the bench cohorts — in its OWN subprocess
-SparkSession, so the 426-query sweep runs in parallel wall-clock
-(round-9 verdict item 8: the serial sweep had grown to ~25 min; the
-sharded sweep targets <=15). Shard 0 additionally smoke-runs
-``entry()``. Coverage is identical to the serial form: the union of the
-shards is exactly sorted(queries), asserted at merge time.
+Default sf_dir: the sf0.01 test data; default shards 4. With no query
+names, shard i of N checks ``sorted(queries)[i::N]`` — a deterministic
+shard->query map, same frozen-list discipline as the bench cohorts — in
+its OWN subprocess SparkSession, so the full sweep runs in parallel
+wall-clock (a serial sweep took ~25 min at 32 cores). Shard 0
+additionally smoke-runs ``entry()``. Coverage is identical to a serial
+sweep: the union of the shards is exactly sorted(queries), asserted at
+merge time. With query names (``q_*`` arguments), only those are
+checked, in-process, on one session with a shard's core count.
 
 Prints one line per failing query and a final summary; exit 1 on any
 mismatch. This is the same gate as tests/test_oracle_parity.py but
@@ -30,13 +30,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def run_shard(sf_dir: str, shard: int, n_shards: int) -> int:
+def check(sf_dir: str, names: list[str], cores: int, smoke_entry: bool):
+    """Check ``names`` against their oracles on one plain session; returns
+    (failed names, entry() row count or None)."""
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
     from tests.oracle_utils import compare, duckdb_con
 
-    cores = max(2, 32 // n_shards)
     spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .config("spark.ui.showConsoleProgress", "false")
@@ -46,23 +47,28 @@ def run_shard(sf_dir: str, shard: int, n_shards: int) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb_con(sf_dir)
     queries, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    names = sorted(queries)[shard::n_shards]
-    fails, notes = [], []
+    fails = []
     for name in names:
-        if name in getattr(entry_mod, "NON_SQL_QUERIES", ()):
-            n = queries[name](spark, sf_dir).count()
-            if n <= 0:
-                fails.append(name)
-                print(f"FAIL {name}: rows-only check returned {n} rows")
-            else:
-                notes.append(name)
-                print(f"NOTE {name}: no SQL oracle (rows-only), rows={n}")
-            continue
-        ok, msg = compare(queries[name](spark, sf_dir), con, oracles[name])
+        if name not in queries:
+            ok, msg = False, "not declared"
+        else:
+            ok, msg = compare(queries[name](spark, sf_dir), con, oracles[name])
         if not ok:
             fails.append(name)
-            print(f"FAIL {name}: {msg}")
-    entry_rows = entry_mod.entry(spark).count() if shard == 0 else None
+            print(f"FAIL {name}: {msg}", flush=True)
+    entry_rows = entry_mod.entry(spark).count() if smoke_entry else None
+    return fails, entry_rows
+
+
+def _cores(n_shards: int) -> int:
+    return max(2, 32 // n_shards)
+
+
+def run_shard(sf_dir: str, shard: int, n_shards: int) -> int:
+    import __spark_entry__ as entry_mod
+
+    names = sorted(entry_mod.queries())[shard::n_shards]
+    fails, entry_rows = check(sf_dir, names, _cores(n_shards), shard == 0)
     print(
         "SHARD_RESULT "
         + json.dumps(
@@ -71,7 +77,6 @@ def run_shard(sf_dir: str, shard: int, n_shards: int) -> int:
                 "n_shards": n_shards,
                 "checked": names,
                 "fails": fails,
-                "notes": notes,
                 "entry_rows": entry_rows,
             }
         ),
@@ -81,19 +86,30 @@ def run_shard(sf_dir: str, shard: int, n_shards: int) -> int:
 
 
 def main() -> int:
-    argv = [a for a in sys.argv[1:]]
+    argv = sys.argv[1:]
     if argv and argv[0] == "--shard":  # internal: --shard i N sf_dir
         return run_shard(argv[3], int(argv[1]), int(argv[2]))
-    n_shards = int(os.environ.get("ORACLE_SWEEP_SHARDS", "4"))
+    n_shards = 4
     sf_dir = "/root/testdata/sf0.01"
+    names = []
     i = 0
     while i < len(argv):
         if argv[i] == "--shards":
             n_shards = int(argv[i + 1])
             i += 2
+        elif argv[i].startswith("q_"):
+            names.append(argv[i])
+            i += 1
         else:
             sf_dir = argv[i]
             i += 1
+    if names:
+        fails, _ = check(sf_dir, names, _cores(n_shards), False)
+        print(
+            f"checked {len(names)} queries at {sf_dir}: "
+            f"{len(names) - len(fails)} ok, {len(fails)} failed"
+        )
+        return 1 if fails else 0
 
     me = os.path.abspath(__file__)
     import tempfile
@@ -124,7 +140,7 @@ def main() -> int:
         for line in out.splitlines():
             if line.startswith("SHARD_RESULT "):
                 payload = json.loads(line[len("SHARD_RESULT "):])
-            elif line.startswith(("FAIL ", "NOTE ")):
+            elif line.startswith("FAIL "):
                 print(line)
         if payload is None:
             print(f"FAIL <shard rc={p.returncode}>: no SHARD_RESULT in output")

@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from bench import _force, _ingest_warehouse, _make_spark  # noqa: E402
+from bench import _cpus, _force, _ingest_warehouse, _make_spark  # noqa: E402
 
 
 def main() -> None:
@@ -41,7 +41,7 @@ def main() -> None:
             i += 1
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     spark = _make_spark(cpus)
     queries = entry_mod.queries()
     _force(entry_mod.entry(spark))

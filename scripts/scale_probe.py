@@ -1,11 +1,15 @@
 #!/usr/bin/env python
-"""Scale-linearity probe: replicate the sf0.1 fact table 10x and 50x into
-/tmp (0.6M → 6M → 30M rows), run the flagship aggregate/join/window
-queries at each size, and report wall times. The point is the *shape* of
-the curve: partial-aggregation and broadcast-join plans should scale
+"""Scale-linearity probes behind SCALE.md: replicate sf0.1 tables into
+/tmp (e.g. the fact table 10x and 50x, 0.6M -> 30M rows), run operators
+at each size, and report wall times. The point is the *shape* of the
+curve: partial-aggregation and broadcast-join plans should scale
 ~linearly in input size with flat shuffle volume per group.
 
-Writes SCALE.md. Run from the repo root (needs ~2 GB in /tmp).
+    python scripts/scale_probe.py [SECTION ...]
+
+Runs every section in SECTIONS (default) or only the named ones, and
+splices each rendered section into SCALE.md in place (appending it if
+absent). Run from the repo root (needs ~2 GB in /tmp).
 """
 
 from __future__ import annotations
@@ -191,7 +195,7 @@ def replicate_docs(spark, factor: int, out: str) -> None:
 
 
 def bench_docs(
-    spark, docs_path: str, ppjoin_obs: dict | None = None
+    spark, docs_path: str, ppjoin_obs: dict
 ) -> dict[str, float]:
     from iowa_liquor_sales_spark.operators.curation import quality_score_linear
     from iowa_liquor_sales_spark.operators.dedup import (
@@ -263,19 +267,18 @@ def bench_docs(
             shingles(docs, "text", "doc_id", n=3), min_jaccard=0.5
         ),
     )
-    if ppjoin_obs is not None:
-        # Untimed extra pass: an Observation binds to one action, so the
-        # counters ride a dedicated run, never the best-of-2 timing.
-        obs: dict = {}
-        allpairs_jaccard(
-            shingles(docs, "text", "doc_id", n=3),
-            min_jaccard=0.5,
-            observations=obs,
-        ).write.format("noop").mode("overwrite").save()
-        ppjoin_obs[n_docs] = (
-            obs["candidates"].get["n_candidates"],
-            obs["survivors"].get["n_survivors"],
-        )
+    # Untimed extra pass: an Observation binds to one action, so the
+    # counters ride a dedicated run, never the best-of-2 timing.
+    obs: dict = {}
+    allpairs_jaccard(
+        shingles(docs, "text", "doc_id", n=3),
+        min_jaccard=0.5,
+        observations=obs,
+    ).write.format("noop").mode("overwrite").save()
+    ppjoin_obs[n_docs] = (
+        obs["candidates"].get["n_candidates"],
+        obs["survivors"].get["n_survivors"],
+    )
     from iowa_liquor_sales_spark.operators.dedup import (
         simhash_hamming_pairs,
         sorted_neighborhood_pairs,
@@ -692,7 +695,8 @@ def bench_round7(spark) -> tuple[dict, dict]:
     return timings, auto_info
 
 
-def render_round7(r7_timings: dict, auto_info: dict) -> list[str]:
+def render_round7(result: tuple[dict, dict]) -> list[str]:
+    r7_timings, auto_info = result
     lines = [
         "",
         "## Round-7 operator probe (ER composition + auto pair-source)",
@@ -905,7 +909,8 @@ def bench_round8(spark, li_paths: dict, docs_paths: dict) -> tuple[dict, dict]:
     return timings, extras
 
 
-def render_round8(r8_timings: dict, extras: dict) -> list[str]:
+def render_round8(result: tuple[dict, dict]) -> list[str]:
+    r8_timings, extras = result
     lines = [
         "",
         "## Round-8 operator probe (modal token budget, decode passes,"
@@ -1167,355 +1172,6 @@ def render_round8c(timings: dict) -> list[str]:
             + " |"
         )
     return lines
-
-
-def main() -> None:
-    spark = get_spark(
-        master="local[32]",
-        shuffle_partitions=64,
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": "24g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    results: dict[int, dict[str, float]] = {}
-    rows: dict[int, int] = {}
-    li_paths: dict[int, str] = {}
-    for factor in (1, 10, 50):
-        path = f"{WORK}/lineitem_x{factor}"
-        if factor == 1:
-            path = f"{BASE}/lineitem.parquet"
-        else:
-            replicate(spark, factor, path)
-        li_paths[factor] = path
-        rows[factor] = spark.read.parquet(path).count()
-        results[factor] = bench_one(spark, path)
-
-    lines = [
-        "# SCALE — linearity probe (replicated sf0.1 fact table)",
-        "",
-        "Generated by `scripts/scale_probe.py` on local[32]. Wall seconds per",
-        "query as the fact table grows 1x -> 10x -> 50x (0.6M -> 30M rows;",
-        "group/join cardinalities scale with it). Linear-ish growth with flat",
-        "per-group shuffle volume is the property that carries to 100 TB on a",
-        "real cluster (scans parallelize across executors; the shuffled",
-        "partial-aggregate state stays O(groups)).",
-        "",
-        "| query | " + " | ".join(f"x{f} ({rows[f]:,} rows)" for f in (1, 10, 50)) + " |",
-        "|---|---|---|---|",
-    ]
-    for q in results[1]:
-        lines.append(
-            f"| {q} | "
-            + " | ".join(f"{results[f][q]:.2f}s" for f in (1, 10, 50))
-            + " |"
-        )
-    doc_results: dict[int, dict[str, float]] = {}
-    doc_rows: dict[int, int] = {}
-    docs_paths: dict[int, str] = {}
-    ppjoin_obs: dict[int, tuple[int, int]] = {}
-    for factor in (1, 4, 16):
-        path = f"{WORK}/documents_x{factor}"
-        if factor == 1:
-            path = f"{BASE}/documents.parquet"
-        else:
-            replicate_docs(spark, factor, path)
-        docs_paths[factor] = path
-        doc_rows[factor] = spark.read.parquet(path).count()
-        doc_results[factor] = bench_docs(spark, path, ppjoin_obs=ppjoin_obs)
-
-    lines += [
-        "",
-        "## Corpus-op probe (replicated, word-salted documents)",
-        "",
-        "Same shape check for the training-data operators: documents",
-        "replicated with per-replica word salting so replicas are NOT",
-        "near-duplicates of each other (candidate pairs grow with the",
-        "corpus, not quadratically with the copying). MinHash cost is one",
-        "shingle scan + banded self-join on (band, bucket); exact dedup,",
-        "token and quality passes are single-scan map-side aggregates.",
-        "",
-        "(x1 cells are measured FIRST in a fresh JVM: a handful of ops pay",
-        "first-use codegen/JIT there — e.g. substring_spans' HOF fold — so an",
-        "x1 reading above x4 is warm-up, not shape; judge the x4 -> x16 slope.)",
-        "",
-        "| op | "
-        + " | ".join(f"x{f} ({doc_rows[f]:,} docs)" for f in (1, 4, 16))
-        + " |",
-        "|---|---|---|---|",
-    ]
-    for q in doc_results[1]:
-        lines.append(
-            f"| {q} | "
-            + " | ".join(f"{doc_results[f][q]:.2f}s" for f in (1, 4, 16))
-            + " |"
-        )
-
-    g_results: dict[int, dict[str, float]] = {}
-    g_rows: dict[int, int] = {}
-    for factor in (1, 10):
-        path = f"{WORK}/orders_x{factor}"
-        if factor == 1:
-            path = f"{BASE}/orders.parquet"
-        else:
-            ordr = spark.read.parquet(f"{BASE}/orders.parquet")
-            reps = F.explode(
-                F.sequence(F.lit(0), F.lit(factor - 1))
-            ).alias("rep")
-            mk = ordr.agg(F.max("o_orderkey")).head()[0] + 1
-            (
-                ordr.select("*", reps)
-                .withColumn(
-                    "o_orderkey",
-                    F.col("o_orderkey") + F.col("rep") * F.lit(mk),
-                )
-                .drop("rep")
-                .repartition(32)
-                .write.mode("overwrite")
-                .parquet(path)
-            )
-        g_rows[factor] = spark.read.parquet(path).count()
-        g_results[factor] = bench_graph(spark, path)
-
-    emb_results: dict[int, dict[str, float]] = {}
-    emb_rows: dict[int, int] = {}
-    for factor in (1, 4, 16):
-        path = f"{WORK}/embeddings_x{factor}"
-        if factor == 1:
-            path = f"{BASE}/embeddings.parquet"
-        else:
-            replicate_embeddings(spark, factor, path)
-        emb_rows[factor] = spark.read.parquet(path).count()
-        emb_results[factor] = bench_embeddings(spark, path)
-
-    lines += [
-        "",
-        "## Embedding-op probe (replicated embeddings)",
-        "",
-        "semdedup = IVF cell assignment (broadcast-centroid argmax) + one",
-        "O(cells) keeper broadcast — linear in corpus size, the scale path",
-        "for semantic dedup. ann_bruteforce = exact top-k, linear scan with",
-        "per-partition top-k merge (TakeOrderedAndProject), the verifier",
-        "baseline. ann_pq / ann_ivf_pq include the in-query codebook train",
-        "(linear corpus scan; production trains once); ivf_pq encodes only",
-        "the probe cell. hard_negatives and the nprobe=1,2,4 recall curve",
-        "are broadcast-anchor dataflows whose slope should track the scan.",
-        "(Exact all-pairs near-dup is deliberately NOT probed at",
-        "growth: it is O(n²) compute by definition — its scale answer is",
-        "the bounded-memory block pairing plus LSH/semdedup composition.)",
-        "",
-        "| op | "
-        + " | ".join(f"x{f} ({emb_rows[f]:,} vecs)" for f in (1, 4, 16))
-        + " |",
-        "|---|---|---|---|",
-    ]
-    for q in emb_results[1]:
-        lines.append(
-            f"| {q} | "
-            + " | ".join(f"{emb_results[f][q]:.2f}s" for f in (1, 4, 16))
-            + " |"
-        )
-
-    lines += [
-        "",
-        "## Graph-op probe (replicated orders-derived edges)",
-        "",
-        "Node moduli are FIXED while edges grow 10x, so average degree",
-        "grows 10x — the hostile direction: Adamic-Adar wedge candidates",
-        "are O(Σ deg²) (the max_deg hub cap is what keeps that bounded at",
-        "scale), PageRank is O(E) per iteration over pre-partitioned",
-        "edges, and Borůvka's candidate argmin is O(E) per round with the",
-        "small-V driver merge costing O(V) regardless of E.",
-        "",
-        "| op | "
-        + " | ".join(f"x{f} ({g_rows[f]:,} orders)" for f in (1, 10))
-        + " |",
-        "|---|---|---|",
-    ]
-    for q in g_results[1]:
-        lines.append(
-            f"| {q} | "
-            + " | ".join(f"{g_results[f][q]:.2f}s" for f in (1, 10))
-            + " |"
-        )
-
-    r5_timings, fuzzy_obs = bench_round5(spark)
-    lines += [
-        "",
-        "## Round-4/5 operator probe (synthesized hostile directions)",
-        "",
-        "burst_fold / acf_lags123: 200 keys fixed while rows grow 10x, so",
-        "per-key fold arrays and window series grow 10x — the super-linear",
-        "risk named in the round-4 verdict. fuzzy_passjoin: dictionary",
-        "concentrated at 10-20 chars (where a plain length band",
-        "degenerates to near-all-pairs) growing 4x -> 16x.",
-        "",
-        "| op | wall by growth factor |",
-        "|---|---|",
-    ]
-    for label, per in r5_timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
-    lines += [
-        "",
-        "### fuzzy_pairs blocking power (PassJoin segments vs length band)",
-        "",
-        "band_pairs = the exact verify-set size the pre-round-5 length-band",
-        "blocking produces on this dictionary (from the length histogram);",
-        "seg = distinct pairs surviving PassJoin segment blocking alone;",
-        "+hist = after the round-6 histogram count filter (lev >= L1/2",
-        "bound) that actually reach levenshtein; matches = true dist<=3",
-        "pairs. Candidates/name still grows on this hex-concentrated",
-        "dictionary (segment agreement is exact-substring luck, which",
-        "scales with names-per-length) — the operator docstring documents",
-        "the fallback trigger (candidates > ~100x matches or ~50/name ->",
-        "switch the pair source to char-shingle MinHash-LSH, verify stage",
-        "unchanged).",
-        "",
-        "| names | length-band pairs | seg candidates | +hist filter |"
-        " matches |",
-        "|---|---|---|---|---|",
-    ]
-    for n_names in sorted(fuzzy_obs):
-        o = fuzzy_obs[n_names]
-        lines.append(
-            f"| {n_names:,} | {o['band_pairs']:,} | {o['seg_candidates']:,}"
-            f" | {o['candidates']:,} | {o['matches']:,} |"
-        )
-
-    lines += [
-        "",
-        "## PPJoin candidate observability"
-        " (`dedup.allpairs_jaccard(observations=...)`)",
-        "",
-        "`ppjoin_prefix` above has the steepest wall growth of the dedup",
-        "family. The operator exposes `Observation` counters (candidates",
-        "entering the exact verify, survivors passing the threshold) so a",
-        "100 TB run can see WHETHER that growth is candidate blowup — the",
-        "signal to fall back to MinHash-LSH — or just verify-stage",
-        "constants. Measured live on the same word-salted corpus",
-        "(n=3 shingles, t=0.5):",
-        "",
-        "| docs | candidates | survivors | candidates/doc |",
-        "|---|---|---|---|",
-    ]
-    for n_docs in sorted(ppjoin_obs):
-        cand, surv = ppjoin_obs[n_docs]
-        lines.append(
-            f"| {n_docs:,} | {cand:,} | {surv:,} | {cand / n_docs:.2f} |"
-        )
-    lines += [
-        "",
-        "Flat candidates/doc means the prefix filter holds the candidate",
-        "set linear in the corpus and PPJoin stays valid as the exact",
-        "verifier; a rising ratio is the cue to switch the pair source to",
-        "`minhash_lsh_pairs` and keep the verify stage unchanged.",
-    ]
-
-    lines += [
-        "",
-        "## Recursive-CTE shape: paths vs frontier (round-5 lesson)",
-        "",
-        "A recursive CTE whose recursive term is a bare JOIN enumerates",
-        "PATHS — O(avg_degree^depth) rows through a cyclic graph — while",
-        "adding DISTINCT makes it a FRONTIER recursion bounded at |V| rows",
-        "per level. Measured on q_recursive_cte's orders-derived graph",
-        "(DuckDB row counts; Spark aborts the path form at sf0.1 with",
-        "RECURSION_ROW_LIMIT_EXCEEDED, its 1M-row recursion guard):",
-        "",
-        "| sf | path-recursion rows | frontier rows |",
-        "|---|---|---|",
-        "| 0.01 | 100,619 | 1,410 |",
-        "| 0.1 | 36,028,248 | 1,740 |",
-        "",
-        "The MIN(d)-per-node answer is identical; only the intermediate",
-        "state differs. At cluster scale the DISTINCT is the difference",
-        "between O(V*depth) shuffle state and an exponential blowup — the",
-        "same frontier-vs-paths discipline the iterative BFS/SSSP",
-        "operators already encode.",
-    ]
-
-    lines += render_round7(*bench_round7(spark))
-
-    lines += render_round8(*bench_round8(spark, li_paths, docs_paths))
-    emb_paths = {f: f"{WORK}/embeddings_x{f}" for f in (4, 16)}
-    emb_paths[1] = f"{BASE}/embeddings.parquet"
-    lines += render_round8b(bench_round8b(spark, docs_paths, emb_paths))
-    lines += render_round8c(bench_round8c(spark))
-
-    lines += [
-        "",
-        "## Quiet-box rerun: q_weighted_median (round-8 check)",
-        "",
-        "q_weighted_median's bench wall moved 0.67 -> 0.99 s across",
-        "r2 -> r7 on UNCHANGED code (git log -S confirms no touch since",
-        "r2). Isolated reruns on an idle box (round 8, sf0.1, bench",
-        "session conf, 32-file lineitem layout, 4 runs): 2.71 s cold",
-        "(JIT/codegen), then 1.04 / 0.72 / 0.69 s steady-state — the",
-        "true cost sits at ~0.7 s and the r7 0.99 s was shared-bench",
-        "noise, the same pattern adjudicated for q_pagerank (r6) and",
-        "q_substring_dedup (r7). No regression; no rework warranted.",
-    ]
-
-    lines += [
-        "",
-        "## Quiet-box rerun: q_substring_dedup (round-7 check)",
-        "",
-        "q_substring_dedup's bench wall moved 2.10 -> 2.94 s across",
-        "r5 -> r6 on UNCHANGED code (the round-6 diff to dedup.py is pure",
-        "additions). Isolated reruns on an idle box (round 7, sf0.1,",
-        "bench session conf, bench warehouse layout with 4-file",
-        "documents): 7.05 s cold (JIT/codegen), then 3.20 / 3.05 / 2.76 s",
-        "steady-state — the true cost sits at ~2.9 s and the r5 2.10 s was",
-        "the lucky tail, the same shared-bench noise pattern q_pagerank",
-        "showed (flagged r5, confirmed r6). No regression; no rework",
-        "warranted.",
-    ]
-
-    lines += [
-        "",
-        "## Quiet-box rerun: q_pagerank (round-6 check)",
-        "",
-        "q_pagerank's bench wall drifted 2.76 -> 3.25 s across r4 -> r5 on",
-        "UNCHANGED code. Isolated reruns on an idle box (round 6, sf0.1,",
-        "local[32], same session conf as bench.py, 4 runs): 8.83 s cold",
-        "(JIT/codegen), then 2.92 / 2.72 / 2.83 s steady-state — i.e. the",
-        "r5 number is shared-bench noise around a ~2.8 s true cost, the",
-        "same pattern q_session_native showed (flagged r4, reverted r5).",
-        "No codegen regression; no rework warranted.",
-    ]
-
-    # Carry over any appendix sections other probes own (the skew-join
-    # probe writes its table once; regenerating this file must not drop
-    # it).
-    try:
-        with open("SCALE.md") as f:
-            prior = f.read()
-        marker = "## Skew-join probe"
-        if marker in prior:
-            # Carry ONLY the skew section (up to the next heading):
-            # anything after it may be a stale copy of a section this
-            # script now generates itself.
-            section = prior[prior.index(marker):]
-            nxt = section.find("\n## ", 1)
-            if nxt != -1:
-                section = section[:nxt]
-            lines += ["", section.rstrip()]
-    except FileNotFoundError:
-        pass
-
-    with open("SCALE.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print("\n".join(lines[-12:]))
-    shutil.rmtree(WORK, ignore_errors=True)
-
-
-if __name__ == "__main__":
-    main()
 
 
 def bench_round8d(spark) -> dict:
@@ -1876,7 +1532,8 @@ def bench_round9(spark) -> tuple[dict, dict, dict]:
     return tails, ann, diag
 
 
-def render_round9(tails: dict, ann: dict, diag: dict) -> list[str]:
+def render_round9(result: tuple[dict, dict, dict]) -> list[str]:
+    tails, ann, diag = result
     lines = [
         "",
         "## Round-9 probe: tail attribution, ANN lifecycle growth, DBSCAN self-diagnosis",
@@ -2194,3 +1851,317 @@ def render_round10b(timings: dict) -> list[str]:
         "that out by construction).",
     ]
     return lines
+
+
+def replicate_orders(spark, factor: int, out: str) -> None:
+    ordr = spark.read.parquet(f"{BASE}/orders.parquet")
+    reps = F.explode(F.sequence(F.lit(0), F.lit(factor - 1))).alias("rep")
+    mk = ordr.agg(F.max("o_orderkey")).head()[0] + 1
+    (
+        ordr.select("*", reps)
+        .withColumn("o_orderkey", F.col("o_orderkey") + F.col("rep") * F.lit(mk))
+        .drop("rep")
+        .repartition(32)
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+
+
+def per_factor(spark, paths: dict, bench, **kw) -> dict[int, tuple]:
+    """{factor: (row count, bench(spark, path))} over one grown input."""
+    return {
+        f: (spark.read.parquet(p).count(), bench(spark, p, **kw))
+        for f, p in paths.items()
+    }
+
+
+def growth_table(first: str, unit: str, per: dict[int, tuple]) -> list[str]:
+    fs = sorted(per)
+    lines = [
+        f"| {first} | "
+        + " | ".join(f"x{f} ({per[f][0]:,} {unit})" for f in fs)
+        + " |",
+        "|---" * (len(fs) + 1) + "|",
+    ]
+    for q in per[fs[0]][1]:
+        lines.append(
+            f"| {q} | " + " | ".join(f"{per[f][1][q]:.2f}s" for f in fs) + " |"
+        )
+    return lines
+
+
+def bench_docs_growth(spark, docs_paths: dict) -> tuple[dict, dict]:
+    ppjoin_obs: dict[int, tuple[int, int]] = {}
+    per = per_factor(spark, docs_paths, bench_docs, ppjoin_obs=ppjoin_obs)
+    return per, ppjoin_obs
+
+
+def render_fact(per: dict) -> list[str]:
+    return [
+        "# SCALE — linearity probe (replicated sf0.1 fact table)",
+        "",
+        "Generated by `scripts/scale_probe.py` on local[32]: `python",
+        "scripts/scale_probe.py` re-measures every section that has a probe",
+        "and splices it in place; `python scripts/scale_probe.py round9",
+        "round10` re-measures only the named ones. Sections without a probe",
+        "are notes the script leaves alone. This first table: wall seconds",
+        "per query as the fact table grows 1x -> 10x -> 50x (0.6M -> 30M",
+        "rows; group/join cardinalities scale with it). Linear-ish growth",
+        "with flat per-group shuffle volume is the property that carries to",
+        "100 TB on a real cluster (scans parallelize across executors; the",
+        "shuffled partial-aggregate state stays O(groups)).",
+        "",
+    ] + growth_table("query", "rows", per)
+
+
+def render_docs(result: tuple[dict, dict]) -> list[str]:
+    per, ppjoin_obs = result
+    lines = [
+        "",
+        "## Corpus-op probe (replicated, word-salted documents)",
+        "",
+        "Same shape check for the training-data operators: documents",
+        "replicated with per-replica word salting so replicas are NOT",
+        "near-duplicates of each other (candidate pairs grow with the",
+        "corpus, not quadratically with the copying). MinHash cost is one",
+        "shingle scan + banded self-join on (band, bucket); exact dedup,",
+        "token and quality passes are single-scan map-side aggregates.",
+        "",
+        "(x1 cells are measured FIRST in a fresh JVM: a handful of ops pay",
+        "first-use codegen/JIT there — e.g. substring_spans' HOF fold — so an",
+        "x1 reading above x4 is warm-up, not shape; judge the x4 -> x16 slope.)",
+        "",
+    ] + growth_table("op", "docs", per)
+    lines += [
+        "",
+        "## PPJoin candidate observability"
+        " (`dedup.allpairs_jaccard(observations=...)`)",
+        "",
+        "`ppjoin_prefix` above has the steepest wall growth of the dedup",
+        "family. The operator exposes `Observation` counters (candidates",
+        "entering the exact verify, survivors passing the threshold) so a",
+        "100 TB run can see WHETHER that growth is candidate blowup — the",
+        "signal to fall back to MinHash-LSH — or just verify-stage",
+        "constants. Measured live on the same word-salted corpus",
+        "(n=3 shingles, t=0.5):",
+        "",
+        "| docs | candidates | survivors | candidates/doc |",
+        "|---|---|---|---|",
+    ]
+    for n_docs in sorted(ppjoin_obs):
+        cand, surv = ppjoin_obs[n_docs]
+        lines.append(
+            f"| {n_docs:,} | {cand:,} | {surv:,} | {cand / n_docs:.2f} |"
+        )
+    lines += [
+        "",
+        "Flat candidates/doc means the prefix filter holds the candidate",
+        "set linear in the corpus and PPJoin stays valid as the exact",
+        "verifier; a rising ratio is the cue to switch the pair source to",
+        "`minhash_lsh_pairs` and keep the verify stage unchanged.",
+    ]
+    return lines
+
+
+def render_embeddings(per: dict) -> list[str]:
+    return [
+        "",
+        "## Embedding-op probe (replicated embeddings)",
+        "",
+        "semdedup = IVF cell assignment (broadcast-centroid argmax) + one",
+        "O(cells) keeper broadcast — linear in corpus size, the scale path",
+        "for semantic dedup. ann_bruteforce = exact top-k, linear scan with",
+        "per-partition top-k merge (TakeOrderedAndProject), the verifier",
+        "baseline. ann_pq / ann_ivf_pq include the in-query codebook train",
+        "(linear corpus scan; production trains once); ivf_pq encodes only",
+        "the probe cell. hard_negatives and the nprobe=1,2,4 recall curve",
+        "are broadcast-anchor dataflows whose slope should track the scan.",
+        "(Exact all-pairs near-dup is deliberately NOT probed at",
+        "growth: it is O(n²) compute by definition — its scale answer is",
+        "the bounded-memory block pairing plus LSH/semdedup composition.)",
+        "",
+    ] + growth_table("op", "vecs", per)
+
+
+def render_graph(per: dict) -> list[str]:
+    return [
+        "",
+        "## Graph-op probe (replicated orders-derived edges)",
+        "",
+        "Node moduli are FIXED while edges grow 10x, so average degree",
+        "grows 10x — the hostile direction: Adamic-Adar wedge candidates",
+        "are O(Σ deg²) (the max_deg hub cap is what keeps that bounded at",
+        "scale), PageRank is O(E) per iteration over pre-partitioned",
+        "edges, and Borůvka's candidate argmin is O(E) per round with the",
+        "small-V driver merge costing O(V) regardless of E.",
+        "",
+    ] + growth_table("op", "orders", per)
+
+
+def render_round5(result: tuple[dict, dict]) -> list[str]:
+    r5_timings, fuzzy_obs = result
+    lines = [
+        "",
+        "## Round-4/5 operator probe (synthesized hostile directions)",
+        "",
+        "burst_fold / acf_lags123: 200 keys fixed while rows grow 10x, so",
+        "per-key fold arrays and window series grow 10x — the super-linear",
+        "risk named in the round-4 verdict. fuzzy_passjoin: dictionary",
+        "concentrated at 10-20 chars (where a plain length band",
+        "degenerates to near-all-pairs) growing 4x -> 16x.",
+        "",
+        "| op | wall by growth factor |",
+        "|---|---|",
+    ]
+    for label, per in r5_timings.items():
+        lines.append(
+            f"| {label} | "
+            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
+            + " |"
+        )
+    lines += [
+        "",
+        "### fuzzy_pairs blocking power (PassJoin segments vs length band)",
+        "",
+        "band_pairs = the exact verify-set size the pre-round-5 length-band",
+        "blocking produces on this dictionary (from the length histogram);",
+        "seg = distinct pairs surviving PassJoin segment blocking alone;",
+        "+hist = after the round-6 histogram count filter (lev >= L1/2",
+        "bound) that actually reach levenshtein; matches = true dist<=3",
+        "pairs. Candidates/name still grows on this hex-concentrated",
+        "dictionary (segment agreement is exact-substring luck, which",
+        "scales with names-per-length) — the operator docstring documents",
+        "the fallback trigger (candidates > ~100x matches or ~50/name ->",
+        "switch the pair source to char-shingle MinHash-LSH, verify stage",
+        "unchanged).",
+        "",
+        "| names | length-band pairs | seg candidates | +hist filter |"
+        " matches |",
+        "|---|---|---|---|---|",
+    ]
+    for n_names in sorted(fuzzy_obs):
+        o = fuzzy_obs[n_names]
+        lines.append(
+            f"| {n_names:,} | {o['band_pairs']:,} | {o['seg_candidates']:,}"
+            f" | {o['candidates']:,} | {o['matches']:,} |"
+        )
+    return lines
+
+
+# Grown inputs: name -> (sf0.1 table, growth factors, replicate function).
+INPUTS = {
+    "lineitem": ("lineitem", (1, 10, 50), replicate),
+    "documents": ("documents", (1, 4, 16), replicate_docs),
+    "embeddings": ("embeddings", (1, 4, 16), replicate_embeddings),
+    "orders": ("orders", (1, 10), replicate_orders),
+}
+
+# Section name -> (bench, render, inputs): bench(spark, *input paths)
+# feeds render, whose `#`/`##` blocks are spliced into SCALE.md.
+SECTIONS = {
+    "fact": (
+        lambda spark, li: per_factor(spark, li, bench_one),
+        render_fact,
+        ("lineitem",),
+    ),
+    "docs": (bench_docs_growth, render_docs, ("documents",)),
+    "embeddings": (
+        lambda spark, emb: per_factor(spark, emb, bench_embeddings),
+        render_embeddings,
+        ("embeddings",),
+    ),
+    "graph": (
+        lambda spark, o: per_factor(spark, o, bench_graph),
+        render_graph,
+        ("orders",),
+    ),
+    "round5": (bench_round5, render_round5, ()),
+    "round7": (bench_round7, render_round7, ()),
+    "round8": (bench_round8, render_round8, ("lineitem", "documents")),
+    "round8b": (bench_round8b, render_round8b, ("documents", "embeddings")),
+    "round8c": (bench_round8c, render_round8c, ()),
+    "round8d": (bench_round8d, render_round8d, ()),
+    "round8e": (bench_round8e, render_round8e, ()),
+    "round9": (bench_round9, render_round9, ()),
+    "round10": (bench_round10, render_round10, ()),
+    "round10b": (bench_round10b, render_round10b, ("documents",)),
+}
+
+
+def grow(spark, name: str) -> dict[int, str]:
+    table, factors, rep = INPUTS[name]
+    paths = {}
+    for f in factors:
+        if f == 1:
+            paths[f] = f"{BASE}/{table}.parquet"
+        else:
+            paths[f] = f"{WORK}/{table}_x{f}"
+            rep(spark, f, paths[f])
+    return paths
+
+
+def _is_heading(line: str) -> bool:
+    return line.startswith(("# ", "## "))
+
+
+def splice(doc: str, rendered: str) -> str:
+    """Put each `#`/`##` block of ``rendered`` into ``doc``: replace the
+    block under the same heading line (up to the next heading), or
+    append it if ``doc`` has no such heading."""
+    lines = doc.rstrip("\n").split("\n") if doc.strip() else []
+    block: list[str] = []
+    # the trailing sentinel heading flushes the last block
+    for line in rendered.strip("\n").split("\n") + ["## "]:
+        if _is_heading(line) and block:
+            while block[-1] == "":
+                block.pop()
+            if block[0] in lines:
+                i = lines.index(block[0])
+                j = next(
+                    (k for k in range(i + 1, len(lines)) if _is_heading(lines[k])),
+                    len(lines),
+                )
+                lines[i:j] = block + ([""] if j < len(lines) else [])
+            else:
+                lines += ([""] if lines else []) + block
+            block = []
+        block.append(line)
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    names = sys.argv[1:] or list(SECTIONS)
+    unknown = [n for n in names if n not in SECTIONS]
+    if unknown:
+        sys.exit(f"unknown section(s) {unknown}; choose from {list(SECTIONS)}")
+    spark = get_spark(
+        master="local[32]",
+        shuffle_partitions=64,
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "24g",
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md"
+    )
+    grown: dict[str, dict[int, str]] = {}
+    for name in names:
+        bench, render, inputs = SECTIONS[name]
+        for i in inputs:
+            if i not in grown:
+                grown[i] = grow(spark, i)
+        rendered = "\n".join(render(bench(spark, *(grown[i] for i in inputs))))
+        doc = ""
+        if os.path.exists(path):
+            with open(path) as f:
+                doc = f.read()
+        with open(path, "w") as f:
+            f.write(splice(doc, rendered))
+        print(rendered, flush=True)
+    shutil.rmtree(WORK, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    main()

@@ -6,8 +6,9 @@ rows, join it to a 30k-row dim, and compare three physical strategies:
   2. the same join with AQE skew handling ON (engine default)
   3. explicit salted_join (the AQE-less fallback the engine provides)
 
-Appends results to SCALE.md. The point: the engine has two working answers
-to the single-hot-key problem that kills naive shuffle joins at 100 TB.
+Splices its section into SCALE.md (scale_probe.splice). The point: the
+engine has two working answers to the single-hot-key problem that kills
+naive shuffle joins at 100 TB.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from iowa_liquor_sales_spark import get_spark  # noqa: E402
 from iowa_liquor_sales_spark.operators.joins import salted_join  # noqa: E402
+from scripts.scale_probe import splice  # noqa: E402
 
 N_FACT = 6_000_000
 N_DIM = 30_000
@@ -89,8 +91,10 @@ def main() -> None:
     for label, secs, n in results:
         lines.append(f"| {label} | {secs}s | {n:,} |")
     assert len({n for _, _, n in results}) == 1, "strategies disagree on rows!"
-    with open("SCALE.md", "a") as f:
-        f.write("\n".join(lines) + "\n")
+    with open("SCALE.md") as f:
+        doc = f.read()
+    with open("SCALE.md", "w") as f:
+        f.write(splice(doc, "\n".join(lines)))
     print("\n".join(lines[6:]))
 
 

@@ -13,14 +13,10 @@ ORACLES = entry_mod.oracle_sql()
 
 
 def test_every_query_has_an_oracle():
-    # NON_SQL_QUERIES is the explicit, justified rows-only allowlist
-    # (driver contract: omit the oracle for non-SQL-expressible ops).
-    missing = set(QUERIES) - set(ORACLES) - entry_mod.NON_SQL_QUERIES
+    missing = set(QUERIES) - set(ORACLES)
     assert not missing, f"queries without oracle SQL: {sorted(missing)}"
     dangling = set(ORACLES) - set(QUERIES)
     assert not dangling, f"oracles without queries: {sorted(dangling)}"
-    # The allowlist may not silently shadow queries that DO have oracles.
-    assert not (entry_mod.NON_SQL_QUERIES & set(ORACLES))
 
 
 @pytest.fixture(scope="module")
@@ -32,13 +28,7 @@ def con(sf_dir):
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, con):
-    df = QUERIES[name](spark, sf_dir)
-    if name in entry_mod.NON_SQL_QUERIES:
-        # Rows-only check, mirroring the driver's weaker gate for
-        # non-SQL-expressible ops.
-        assert df.count() > 0 and df.columns
-        return
-    ok, msg = compare(df, con, ORACLES[name])
+    ok, msg = compare(QUERIES[name](spark, sf_dir), con, ORACLES[name])
     assert ok, f"{name}: {msg}"
 
 
