@@ -49,6 +49,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from iowa_liquor_sales_spark import get_spark  # noqa: E402
+from iowa_liquor_sales_spark.caching import query_scope  # noqa: E402
 from iowa_liquor_sales_spark.functions.cleansing import to_silver  # noqa: E402
 from iowa_liquor_sales_spark.schemas import read_table  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -242,8 +243,58 @@ COHORTS: dict[str, list[str]] = {
 }
 
 
-def _force(df) -> None:
+# Fixed warm-up suite, untimed, identical for every cohort and every
+# round: one pass over five queries covering the common codegen paths
+# (parquet scan, hash aggregate, broadcast star join, string exprs,
+# window, noop sink). Deliberately SMALL: an A/B at sf0.1 showed a full
+# untimed pre-pass over the whole cohort makes the timed portion 13-15%
+# SLOWER (the pre-loaded codegen classes and heap history are exactly
+# the code-cache/GC pressure the cohort split removes), while
+# back-to-back runs of this small-warm-up protocol hold the 158-entry
+# median within ~4% — that run-to-run stability, not absolute warmth,
+# is what round-over-round comparison needs.
+WARMUP = (
+    "q_scan_parquet",
+    "q_groupby_agg",
+    "q_star_join",
+    "q_token_count",
+    "q_events_window",
+)
+
+
+def force(df) -> None:
+    """Compute ``df`` end to end into the noop sink (nothing collected)."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def best_of(spark, label: str, fn, reps: int = 2) -> float:
+    """Minimum wall (s) over ``reps`` calls of ``fn()``. Each call runs in
+    its own ``query_scope``: its jobs carry ``label`` and the session's
+    cache is released after the call (outside the timed region), so an
+    ``fn`` that builds and forces its own work starts every rep, and
+    leaves whatever runs next, with an empty cache."""
+    best = float("inf")
+    for _ in range(reps):
+        with query_scope(spark, label):
+            t0 = time.perf_counter()
+            fn()
+            best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def prepare(spark, queries: dict, sf_dir: str, cpus: str, timed: bool):
+    """Warm the session, stage the warehouse, then run the WARMUP suite
+    against it, each warm-up query in its own scope. Returns
+    ``_ingest_warehouse``'s (warehouse dir, ingest wall)."""
+    # Warm the JVM/session on the smallest scale so first-query JIT/
+    # codegen cost doesn't land on an arbitrary headline query.
+    with query_scope(spark, "entry"):
+        force(entry_mod.entry(spark))
+    wh, ingest_sec = _ingest_warehouse(spark, sf_dir, int(cpus), timed)
+    for name in WARMUP:
+        with query_scope(spark, name):
+            force(queries[name](spark, wh))
+    return wh, ingest_sec
 
 
 def stage_stringly(spark, sf: str, path: str, n_parts: int = 32) -> None:
@@ -344,13 +395,12 @@ def _ingest_warehouse(spark, sf_dir: str, cpus: int, timed: bool):
     # same trick a cluster ingest job uses for many small inputs.
     # Best-of-2 when timed (single-shot walls swing on a busy JVM;
     # overwrite mode makes the second pass identical work).
-    ingest_best = float("inf")
-    for _ in range(2 if timed else 1):
-        t0 = time.perf_counter()
+    def ingest_all() -> None:
         with ThreadPoolExecutor(max_workers=len(layout)) as pool:
             list(pool.map(lambda tp: _ingest(*tp), layout))
-        ingest_best = min(ingest_best, time.perf_counter() - t0)
-    return wh, round(ingest_best, 3)
+
+    best = best_of(spark, "q_warehouse_ingest", ingest_all, 2 if timed else 1)
+    return wh, round(best, 3)
 
 
 def run_cohort(cohort: str) -> None:
@@ -363,51 +413,18 @@ def run_cohort(cohort: str) -> None:
     timings: dict[str, float] = {}
     stage_splits: dict[str, float] = {}
 
-    # Warm the JVM/session on the smallest scale so first-query JIT/
-    # codegen cost doesn't land on an arbitrary headline query.
-    _force(entry_mod.entry(spark))
-
-    wh, ingest_sec = _ingest_warehouse(
-        spark, sf_dir, int(cpus), timed=(cohort == "core")
-    )
+    wh, ingest_sec = prepare(spark, queries, sf_dir, cpus, cohort == "core")
     if cohort == "core":
         timings["q_warehouse_ingest"] = ingest_sec
 
-    # Fixed warm-up suite, untimed, identical for every cohort and every
-    # round: one pass over five queries covering the common codegen
-    # paths (parquet scan, hash aggregate, broadcast star join, string
-    # exprs, window, noop sink). Deliberately SMALL: an A/B at sf0.1
-    # showed a full untimed pre-pass over the whole cohort makes the
-    # timed portion 13-15% SLOWER (the pre-loaded codegen classes and
-    # heap history are exactly the code-cache/GC pressure the cohort
-    # split removes), while back-to-back runs of this small-warm-up
-    # protocol hold the 158-entry median within ~4% — that run-to-run
-    # stability, not absolute warmth, is what round-over-round
-    # comparison needs.
-    for wname in (
-        "q_scan_parquet",
-        "q_groupby_agg",
-        "q_star_join",
-        "q_token_count",
-        "q_events_window",
-    ):
-        _force(queries[wname](spark, wh))
-
-    def timed(name, mk) -> None:
-        # Best-of-2, cache cleared before each run: single-shot walls in
-        # one busy JVM swing ±1s from GC/JIT/codegen; the min is the
-        # repeatable cost and the same protocol scripts/scale_probe.py
-        # documents. clearCache keeps each run self-contained.
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _force(mk())
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    def timed(store, name, fn) -> None:
+        # Best-of-2 (best_of): single-shot walls in one busy JVM swing
+        # ±1s from GC/JIT/codegen; the min is the repeatable cost. Each
+        # rep builds its work afresh and releases its cache after.
+        store[name] = round(best_of(spark, name, fn), 3)
 
     for name in COHORTS[cohort]:
-        timed(name, lambda name=name: queries[name](spark, wh))
+        timed(timings, name, lambda: force(queries[name](spark, wh)))
 
     if cohort == "simjoin":
         # Attribute q_ann_pq's wall between the Lloyd codebook TRAIN (a
@@ -421,16 +438,14 @@ def run_cohort(cohort: str) -> None:
         )
 
         emb = read_table(spark, wh, "embeddings")
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _pq_train_encode(emb, 8, 4, 1, 64, "vec_id", "embedding")
-            best = min(best, time.perf_counter() - t0)
-        pq_train = round(best, 3)
-        stage_splits["q_ann_pq_train"] = pq_train
+        timed(
+            stage_splits,
+            "q_ann_pq_train",
+            lambda: _pq_train_encode(emb, 8, 4, 1, 64, "vec_id", "embedding"),
+        )
         stage_splits["q_ann_pq_adc"] = round(
-            max(timings.get("q_ann_pq", 0.0) - pq_train, 0.0), 3
+            max(timings.get("q_ann_pq", 0.0) - stage_splits["q_ann_pq_train"], 0.0),
+            3,
         )
 
         # The prebuilt-index lifecycle split: q_ann_prebuilt's headline
@@ -438,30 +453,30 @@ def run_cohort(cohort: str) -> None:
         # oracle-checked query is self-contained; production builds once
         # and pays only the query side.
         idx_path = tempfile.mkdtemp(prefix="bench_annidx_") + "/ann"
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            build_ann_index(emb, idx_path, n_cells=16)
-            best = min(best, time.perf_counter() - t0)
-        stage_splits["q_ann_prebuilt_build"] = round(best, 3)
+        timed(
+            stage_splits,
+            "q_ann_prebuilt_build",
+            lambda: build_ann_index(emb, idx_path, n_cells=16),
+        )
         idx = load_ann_index(spark, idx_path)
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _force(
+        timed(
+            stage_splits,
+            "q_ann_prebuilt_query",
+            lambda: force(
                 ivf_topk(emb, query_id=7, k=10, nprobe=2, index=idx).select(
                     "vec_id", "rnk"
                 )
-            )
-            best = min(best, time.perf_counter() - t0)
-        stage_splits["q_ann_prebuilt_query"] = round(best, 3)
+            ),
+        )
 
     if cohort == "baseline":
         staged = tempfile.mkdtemp(prefix="bench_stringly_") + "/lineitem_str"
         stage_stringly(spark, wh, staged, n_parts=int(cpus))
-        timed("q_silver_transform", lambda: q_silver_transform(spark, staged))
+        timed(
+            timings,
+            "q_silver_transform",
+            lambda: force(q_silver_transform(spark, staged)),
+        )
 
         # Reference load-stage analog (BASELINE: 19k rows/s in-memory CSV
         # + COPY FROM STDIN): serialize lineitem to the same CSV wire
@@ -469,14 +484,13 @@ def run_cohort(cohort: str) -> None:
         # embarrassingly parallel and runs one task per core (the
         # cluster-shaped plan). Real file write — best-of-2.
         csv_dest = tempfile.mkdtemp(prefix="bench_csvload_") + "/lineitem_csv"
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            read_table(spark, wh, "lineitem").write.mode("overwrite").option(
+        timed(
+            timings,
+            "q_csv_load",
+            lambda: read_table(spark, wh, "lineitem").write.mode("overwrite").option(
                 "nullValue", "\\N"
-            ).option("header", "false").csv(csv_dest)
-            best = min(best, time.perf_counter() - t0)
-        timings["q_csv_load"] = round(best, 3)
+            ).option("header", "false").csv(csv_dest),
+        )
 
     print(
         "BENCH_COHORT_RESULT "

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from iowa_liquor_sales_spark.caching import pin
 from iowa_liquor_sales_spark.functions.hashing import (
     MERSENNE31,
     affine_params,
@@ -151,7 +152,7 @@ def jaccard_pairs(
             # Fraction caps need the corpus size — one distinct pass over
             # the (persisted) index. Callers that already know N should
             # pass an absolute int cap and skip this job.
-            base = keyed.persist()
+            base = pin(keyed)
             cap = max(1, int(max_df * base.select("doc_id").distinct().count()))
             keyed = base
         else:
@@ -174,7 +175,7 @@ def jaccard_pairs(
     # The count() materializes the cache NOW: with a lazy persist, the
     # three consumers land in one job and race to compute the uncached
     # subtree, each re-running the scan→explode (measured ~4x wall).
-    keyed = keyed.persist()
+    keyed = pin(keyed)
     keyed.count()
     if base is not None:
         base.unpersist()
@@ -308,7 +309,7 @@ def minhash_lsh_pairs(
     # the query, done 4x. Persist it once: O(docs) rows of k ints + the
     # hashed-shingle set, MEMORY_AND_DISK so it spills rather than OOMs at
     # corpus scale (measured 2.2x end-to-end on the bench corpus).
-    per_doc = per_doc.persist()
+    per_doc = pin(per_doc)
     # Materialize the cache eagerly: the three downstream shuffles land in
     # one job and would otherwise race on the uncached subtree, re-running
     # the shingle→signature aggregate up to 4x (measured 59s -> ~10s on
@@ -418,7 +419,7 @@ def minhash_jaccard_est(
     their k signature columns.
     """
     sh = shingles(df, text_col, id_col, n=n)
-    sigs = minhash_signatures(sh, num_hashes=num_hashes).persist()
+    sigs = pin(minhash_signatures(sh, num_hashes=num_hashes))
     sigs.count()
     buckets = minhash_band_buckets(
         sigs, rows_per_band=rows_per_band, num_hashes=num_hashes
@@ -566,7 +567,7 @@ def containment_pairs(
             .filter(F.col("df") <= int(max_df))
             .drop("df")
         )
-    keyed = keyed.persist()
+    keyed = pin(keyed)
     keyed.count()
     sizes = keyed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = keyed.alias("a"), keyed.alias("b")
@@ -633,7 +634,7 @@ def allpairs_jaccard(
     keyed = shingle_df.select(
         "doc_id", F.xxhash64("shingle").alias("shingle")
     )
-    keyed = keyed.persist()
+    keyed = pin(keyed)
     keyed.count()
     dfreq = keyed.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     with_df = keyed.join(dfreq, "shingle")
@@ -716,14 +717,14 @@ def simhash_hamming_pairs(
     # self-join's two sides land in one job and re-ran the whole
     # scan→tokenize→simhash aggregate once per side (racing the cache
     # if lazily persisted — the measured jaccard_pairs defect).
-    banded = fp.select(
+    banded = pin(fp.select(
         "doc_id",
         "simhash",
         F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
     ).withColumn(
         "block",
         F.expr(f"shiftright(simhash, band * {band_bits}) & {mask}"),
-    ).persist()
+    ))
     banded.count()
     a = banded.select(
         "band", "block",
@@ -820,7 +821,7 @@ def _cross_doc_gram_hits(
     df = _ensure_parallelism(df)  # k-gram explode multiplies rows ~|words|x
     words = F.split(F.trim(F.col(text_col)), " +")
     n = F.size(words)
-    grams = df.select(
+    grams = pin(df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(
             # guard: sequence(1, 0) is DESCENDING [1,0] in Spark, not
@@ -842,7 +843,7 @@ def _cross_doc_gram_hits(
         "doc_id",
         F.col("g.start").alias("start"),
         F.xxhash64("g.gram").alias("gh"),
-    ).persist()
+    ))
     # persisted: grams feeds both the cross-doc aggregate and the join
     # probe — left lazy, the k-gram explode (the expensive half) ran
     # twice (optimization round 10).
@@ -1024,7 +1025,7 @@ def minhash_calibration_report(
     # Same persist+materialize contract as minhash_lsh_pairs: the
     # signature relation feeds the band self-join and both sides of the
     # pair join.
-    per_doc = per_doc.persist()
+    per_doc = pin(per_doc)
     per_doc.count()
     buckets = minhash_band_buckets(
         per_doc, rows_per_band=rows_per_band, num_hashes=num_hashes

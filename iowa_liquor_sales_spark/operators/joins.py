@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from iowa_liquor_sales_spark.caching import pin
+
 
 def fk_violations(
     fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
@@ -439,9 +441,9 @@ def fuzzy_pairs(
         # verify plan reads it, so an eager unpersist here would just
         # re-run the explode/join subtree; same documented cache-
         # retention idiom as dedup.minhash_lsh_pairs and
-        # binary_ops.dhash_hamming_pairs (callers churning many
-        # dictionaries per session: spark.catalog.clearCache()).
-        cand = cand.persist()
+        # binary_ops.dhash_hamming_pairs (released when the enclosing
+        # caching.query_scope exits).
+        cand = pin(cand)
         n_cand = cand.count()
         n_names = names.count()
         if n_cand > auto_max_cand_per_name * max(n_names, 1):
@@ -507,12 +509,11 @@ def fuzzy_pairs(
         # Ground truth for the sample: complete PassJoin with the
         # sampled names as index side (finds EVERY true pair whose
         # shorter member is sampled), verified by the same bound.
-        truth = (
+        truth = pin(
             _passjoin_cand(names.filter(_sampled(F.col("name"))), names)
             .withColumn("dist", F.levenshtein("name_a", "name_b"))
             .filter(F.col("dist") <= max_dist)
             .select("name_a", "name_b")
-            .persist()
         )
         got = (
             cand.filter(_sampled(F.col("name_a")))

@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from iowa_liquor_sales_spark.caching import pin
+
 
 def rule_counts(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
     """Evaluate named boolean rules in one scan: returns a single row with
@@ -1697,9 +1699,9 @@ def by_fdr(
     # 10). bh_fdr/holm derive m from the window itself and need no
     # second pass, but c_e9's harmonic sum must be computed ONCE from
     # a 1-row relation, never per hypothesis.
-    h = hypotheses.select(
+    h = pin(hypotheses.select(
         F.col(id_col).alias("id"), F.col(p_col).cast("long").alias("p")
-    ).persist()
+    ))
     cm = h.agg(F.count(F.lit(1)).cast("long").alias("m")).select(
         "m",
         F.expr(
@@ -2772,7 +2774,7 @@ def conformal_interval(
 
     from ..functions.hashing import hash60
 
-    base = df.select(
+    base = pin(df.select(
         F.col(key_col).alias("id"),
         F.col(group_col).alias("g"),
         F.floor(
@@ -2786,18 +2788,18 @@ def conformal_interval(
             )
             % 3
         ).alias("part"),  # 0 = fit, 1 = calibration, 2 = test
-    ).persist()
+    ))
     # base is consumed by all three split halves and means by two of
     # them — left lazy each branch re-ran the fact scan + hash split
     # (before plan: 10 scans). The qhat broadcast build materializes
     # both caches before the final job (optimization round 10).
     fit = base.filter(F.col("part") == 0)
-    means = fit.groupBy("g").agg(
+    means = pin(fit.groupBy("g").agg(
         F.count(F.lit(1)).cast("long").alias("nf"),
         F.sum("v").cast("decimal(38,0)").alias("sf"),
     ).select(
         "g", "nf", F.expr("CAST(sf div nf AS BIGINT)").alias("pred")
-    ).persist()
+    ))
     cal = base.filter(F.col("part") == 1).join(means, "g").select(
         F.abs(F.col("v") - F.col("pred")).alias("resid")
     )

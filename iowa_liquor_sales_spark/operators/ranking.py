@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from iowa_liquor_sales_spark.caching import pin
+
 _PART_BITS = 33  # monotonically_increasing_id: id = pid << 33 | row_idx
 
 
@@ -41,13 +43,13 @@ def global_row_number(
     (which should be a unique key for deterministic output) without ever
     collapsing to one partition.
 
-    The ranged intermediate is persisted (MEMORY_AND_DISK) to pin one
-    execution of the range shuffle — see the inline comment. That cache
-    entry outlives the call: pass ``cache_handle=[]`` to receive the
-    persisted DataFrame (appended to the list) and ``unpersist()`` it
-    once the output is materialized; callers that skip this in a
-    long-lived session accumulate one cached relation per call until
-    ``spark.catalog.clearCache()``.
+    The ranged intermediate is pinned (``caching.pin``, MEMORY_AND_DISK)
+    to hold one execution of the range shuffle — see the inline comment.
+    That cache entry outlives the call, so it must stay cached until the
+    output is forced: pass ``cache_handle=[]`` to receive the persisted
+    DataFrame (appended to the list) and ``unpersist()`` it once the
+    output is materialized; otherwise it lives until the enclosing
+    ``caching.query_scope`` exits.
     """
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(parts, *order_cols).sortWithinPartitions(
@@ -62,7 +64,7 @@ def global_row_number(
     # caller's output job would otherwise each re-run repartitionByRange,
     # whose sampled boundaries are not guaranteed identical across jobs —
     # offsets from one partitioning applied to another would corrupt ranks.
-    local = local.persist(StorageLevel.MEMORY_AND_DISK)
+    local = pin(local, StorageLevel.MEMORY_AND_DISK)
     if cache_handle is not None:
         cache_handle.append(local)
     # O(#partitions) rows to the driver — bounded by cluster size, not data.
@@ -133,7 +135,7 @@ def global_cumsum(
     # Pin ONE execution of the range shuffle (same reasoning as
     # global_row_number: the offsets job and the caller's output job
     # must see identical sampled boundaries).
-    tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+    tagged = pin(tagged, StorageLevel.MEMORY_AND_DISK)
     sums: dict[int, list] = {
         r["_pid"]: [r[f"_s{i}"] for i in range(len(vcols))]
         for r in tagged.groupBy("_pid")

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..caching import pin
 from ..functions.dates import EPOCH_US_SQL, epoch_us
 from ..functions.sums import det_double, xsum
 
@@ -1373,7 +1374,7 @@ def rolling_anomaly(
     # Persist the three tiny relations (optimization round 10); the
     # broadcast builds materialize them sequentially, so there is no
     # same-job cache-fill race.
-    daily = (
+    daily = pin(
         df.select(
             F.to_date(F.date_trunc("DAY", F.col(ts_col))).alias("day"),
             F.floor(
@@ -1384,7 +1385,6 @@ def rolling_anomaly(
         )
         .groupBy("day")
         .agg(F.sum("v").alias("v"))
-        .persist()
     )
     days = daily.select(
         F.col("day").alias("tday"),
@@ -1407,10 +1407,10 @@ def rolling_anomaly(
         .filter(F.col("rn") == F.expr("(n + 1) div 2"))
         .select(F.col("tday").alias("day"), F.col("wv").alias("med"))
     )
-    resid = daily.join(med, "day").select(
+    resid = pin(daily.join(med, "day").select(
         "day", "v", F.col("med").alias("med_trailing"),
         (F.col("v") - F.col("med")).alias("r"),
-    ).persist()
+    ))
     # global lower-median of residuals, then MAD — both over O(days)
     wr = Window.orderBy("r", "day")
     wall = Window.partitionBy()
@@ -1423,9 +1423,9 @@ def rolling_anomaly(
         .filter(F.col("rn") == F.expr("(n + 1) div 2"))
         .select(F.col("r").alias("med_r"))
     )
-    dev = resid.crossJoin(F.broadcast(med_r)).withColumn(
+    dev = pin(resid.crossJoin(F.broadcast(med_r)).withColumn(
         "ad", F.abs(F.col("r") - F.col("med_r"))
-    ).persist()
+    ))
     wd = Window.orderBy("ad", "day")
     mad = (
         dev.select(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from iowa_liquor_sales_spark.caching import pin
+
 # Tiny stopword marker profiles for the language-ID heuristic. On corpora
 # where the vocabularies genuinely differ these separate well; the synthetic
 # test corpus shares one vocabulary across its `lang` labels, so the
@@ -521,7 +523,7 @@ def ngram_lm_counts(
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
     )
-    big_all = big_all.persist()
+    big_all = pin(big_all)
     kept = big_all.filter(F.col("c12") >= min_count)
     prefix_types = big_all.groupBy("w2").agg(
         F.count(F.lit(1)).cast("long").alias("prefix_types")
@@ -635,14 +637,13 @@ def sparse_cosine_pairs(
     # tf is consumed by both the docfreq cap and the kept index — left
     # lazy, the scan→explode→aggregate subtree ran twice (optimization
     # round 10).
-    tf = (
+    tf = pin(
         df.select(
             F.col(id_col).alias("doc_id"),
             F.explode(words(text_col)).alias("word"),
         )
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     # The df cap stays in-plan (1-row corpus count broadcast onto the
     # O(vocab) docfreq relation) — no driver action, one job end-to-end.
@@ -666,7 +667,7 @@ def sparse_cosine_pairs(
         .select("word")
     )
     kept = tf.join(keep_words, "word")
-    kept = kept.persist()
+    kept = pin(kept)
     # Materialize the cache eagerly: the norms aggregate and the two
     # self-join sides land in one job and would otherwise race on the
     # uncached subtree (the same measured defect jaccard_pairs
@@ -728,9 +729,9 @@ def lm_score_docs(
     joined back by word keys (AQE handles stop-word skew), one final
     per-doc aggregate. Docs with fewer than 2 words emit nothing.
     """
-    wdf = df.select(
+    wdf = pin(df.select(
         F.col(id_col).alias("doc_id"), words(text_col).alias("ws")
-    ).persist()
+    ))
     ws = F.col("ws")
     grams = F.when(
         F.size(ws) >= 2,
@@ -1195,7 +1196,7 @@ def ngram_novelty(
     # sh feeds both the min-id aggregate and the join probe — left
     # lazy the scan+explode ran twice; the first-doc broadcast build
     # fills this cache before the probe job (optimization round 10).
-    sh = shingles(df, text_col, id_col, n=n).persist()
+    sh = pin(shingles(df, text_col, id_col, n=n))
     first = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         sh.join(first, "shingle")
@@ -1848,14 +1849,13 @@ def contamination_matrix(
     # ev feeds both the totals (broadcast build, which fills this
     # cache) and the overlap join — left lazy the eval-side
     # shingle-explode + distinct ran twice (optimization round 10).
-    ev = (
+    ev = pin(
         eval_df.select(
             F.col(source_col).alias("eval_source"),
             F.explode(word_ngrams(F.col(text_col), n)).alias("shingle"),
         )
         .select("eval_source", hash60("shingle").alias("gh"))
         .distinct()
-        .persist()
     )
     totals = ev.groupBy("eval_source").agg(
         F.count(F.lit(1)).cast("long").alias("n_eval_grams")

@@ -13,7 +13,9 @@ wall-clock (a serial sweep took ~25 min at 32 cores). Shard 0
 additionally smoke-runs ``entry()``. Coverage is identical to a serial
 sweep: the union of the shards is exactly sorted(queries), asserted at
 merge time. With query names (``q_*`` arguments), only those are
-checked, in-process, on one session with a shard's core count.
+checked, in-process, on one session with a shard's core count. Each
+query runs in ``caching.query_scope``: its jobs carry its name and its
+cache is released before the next query.
 
 Prints one line per failing query and a final summary; exit 1 on any
 mismatch. This is the same gate as tests/test_oracle_parity.py but
@@ -36,6 +38,7 @@ def check(sf_dir: str, names: list[str], cores: int, smoke_entry: bool):
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from iowa_liquor_sales_spark.caching import query_scope
     from tests.oracle_utils import compare, duckdb_con
 
     spark = (
@@ -52,7 +55,8 @@ def check(sf_dir: str, names: list[str], cores: int, smoke_entry: bool):
         if name not in queries:
             ok, msg = False, "not declared"
         else:
-            ok, msg = compare(queries[name](spark, sf_dir), con, oracles[name])
+            with query_scope(spark, name):
+                ok, msg = compare(queries[name](spark, sf_dir), con, oracles[name])
         if not ok:
             fails.append(name)
             print(f"FAIL {name}: {msg}", flush=True)
@@ -61,7 +65,7 @@ def check(sf_dir: str, names: list[str], cores: int, smoke_entry: bool):
 
 
 def _cores(n_shards: int) -> int:
-    return max(2, 32 // n_shards)
+    return max(2, len(os.sched_getaffinity(0)) // n_shards)
 
 
 def run_shard(sf_dir: str, shard: int, n_shards: int) -> int:

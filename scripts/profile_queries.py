@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Round-10 optimization profiler: time named queries in isolation with
-the bench's exact protocol (same warehouse layout, same warm-up, noop
-sink, best-of-N with clearCache) and optionally dump their
-``explain("formatted")`` plans to plans/r10/<name>_<tag>.txt.
+"""Time named queries in isolation with the bench's exact protocol (same
+warehouse layout, same warm-up, noop sink, ``bench.best_of`` timing:
+each rep builds the query and releases its cache after) and optionally
+dump their ``explain("formatted")`` plans to plans/r10/<name>_<tag>.txt.
 
     python scripts/profile_queries.py [--reps N] [--plans TAG] q_a q_b ...
 
 Runs ONE JVM for the whole list (so relative numbers are comparable to a
-bench cohort's interior, not to its cold start). Prints one JSON line at
-the end: {"timings": {...}, "sf": ...}.
+bench cohort's interior, not to its cold start). Each query's jobs carry
+its name as job group and description. Prints one JSON line at the end:
+{"timings": {...}, "sf_dir": ..., "reps": ...}.
 """
 
 from __future__ import annotations
@@ -16,12 +17,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from bench import _cpus, _force, _ingest_warehouse, _make_spark  # noqa: E402
+from bench import _cpus, _make_spark, best_of, force, prepare  # noqa: E402
+from iowa_liquor_sales_spark.caching import query_scope  # noqa: E402
 
 
 def main() -> None:
@@ -44,36 +45,22 @@ def main() -> None:
     cpus = _cpus()
     spark = _make_spark(cpus)
     queries = entry_mod.queries()
-    _force(entry_mod.entry(spark))
-    wh, _ = _ingest_warehouse(spark, sf_dir, int(cpus), timed=False)
-    for wname in (
-        "q_scan_parquet",
-        "q_groupby_agg",
-        "q_star_join",
-        "q_token_count",
-        "q_events_window",
-    ):
-        _force(queries[wname](spark, wh))
+    wh, _ = prepare(spark, queries, sf_dir, cpus, timed=False)
 
     timings: dict[str, float] = {}
     for name in names:
         if plan_tag:
             os.makedirs("plans/r10", exist_ok=True)
-            df = queries[name](spark, wh)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            with query_scope(spark, name):
+                df = queries[name](spark, wh)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
             with open(f"plans/r10/{name}_{plan_tag}.txt", "w") as fh:
                 fh.write(plan)
-        best = float("inf")
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            _force(queries[name](spark, wh))
-            best = min(best, time.perf_counter() - t0)
-        spark.sparkContext.setJobDescription(None)
-        timings[name] = round(best, 3)
+        timings[name] = round(
+            best_of(spark, name, lambda: force(queries[name](spark, wh)), reps), 3
+        )
         print(f"PROFILE {name}: {timings[name]} s", flush=True)
 
     print(json.dumps({"timings": timings, "sf_dir": sf_dir, "reps": reps}))

@@ -17,13 +17,15 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import best_of, force  # noqa: E402
 from iowa_liquor_sales_spark import get_spark  # noqa: E402
+from iowa_liquor_sales_spark.caching import query_scope  # noqa: E402
 from iowa_liquor_sales_spark.functions.sums import davg, dsum  # noqa: E402
 from iowa_liquor_sales_spark.operators.aggregates import (  # noqa: E402
     pricing_summary,
@@ -33,6 +35,31 @@ from iowa_liquor_sales_spark.operators.joins import star_join  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 WORK = "/tmp/scale_probe"
+
+
+def probe(spark, timings: dict, label: str, mk, factor=None, reps: int = 2):
+    """Record the best-of-``reps`` wall (s, 2 dp) of forcing ``mk`` as
+    ``timings[label]``, or as ``timings[label][factor]`` in a growth
+    table. ``mk`` is a zero-arg callable that builds a fresh DataFrame
+    per rep, or a prebuilt DataFrame that every rep re-forces (its
+    build-time pins are released after the first rep). Best-of: single-
+    shot walls on a busy local[32] JVM are noisy (GC, JIT, AQE re-plan);
+    the min is the repeatable cost."""
+    run = mk if callable(mk) else (lambda: mk)
+    wall = round(best_of(spark, label, lambda: force(run()), reps), 2)
+    if factor is None:
+        timings[label] = wall
+    else:
+        timings.setdefault(label, {})[factor] = wall
+
+
+def wall_rows(timings: dict) -> list[str]:
+    """Markdown rows ``| label | x1: 0.12s, x4: 0.30s |`` of a growth
+    table that :func:`probe` filled."""
+    return [
+        f"| {label} | " + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per)) + " |"
+        for label, per in timings.items()
+    ]
 
 
 def replicate(spark, factor: int, out: str) -> None:
@@ -55,15 +82,7 @@ def bench_one(spark, li_path: str) -> dict[str, float]:
     o = spark.read.parquet(f"{BASE}/orders.parquet")
     timings = {}
 
-    def t(label, df):
-        # best-of-2: single-shot walls on a busy local[32] JVM are noisy
-        # (GC, JIT, AQE re-plan); the min is the repeatable cost.
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[label] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     t("groupby_agg", pricing_summary(li))
     # Star-ish join: fact joins broadcast orders dim (orderkey mod original
@@ -140,23 +159,14 @@ def bench_one(spark, li_path: str) -> dict[str, float]:
 
     keys = li.select("l_orderkey", "l_linenumber")
 
-    def t_built(label, mk):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        timings[label] = round(best, 2)
-
-    t_built(
+    t(
         "rank_window_1part",
         lambda: keys.withColumn(
             "rn",
             F.row_number().over(Window.orderBy("l_orderkey", "l_linenumber")),
         ),
     )
-    t_built(
+    t(
         "rank_distributed",
         lambda: global_row_number(keys, ["l_orderkey", "l_linenumber"]),
     )
@@ -214,16 +224,7 @@ def bench_docs(
     n_docs = docs.count()
     timings = {}
 
-    def t(label, df):
-        # best-of-2: single-shot walls on a busy local[32] JVM are noisy
-        # (GC, JIT, AQE re-plan); the min is the repeatable cost.
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        timings[label] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     t("exact_dedup", exact_dedup(docs, "text", "doc_id"))
     t("token_count", token_counts(docs, "text", "doc_id"))
@@ -270,11 +271,13 @@ def bench_docs(
     # Untimed extra pass: an Observation binds to one action, so the
     # counters ride a dedicated run, never the best-of-2 timing.
     obs: dict = {}
-    allpairs_jaccard(
-        shingles(docs, "text", "doc_id", n=3),
-        min_jaccard=0.5,
-        observations=obs,
-    ).write.format("noop").mode("overwrite").save()
+    force(
+        allpairs_jaccard(
+            shingles(docs, "text", "doc_id", n=3),
+            min_jaccard=0.5,
+            observations=obs,
+        )
+    )
     ppjoin_obs[n_docs] = (
         obs["candidates"].get["n_candidates"],
         obs["survivors"].get["n_survivors"],
@@ -389,14 +392,7 @@ def bench_embeddings(spark, emb_path: str) -> dict[str, float]:
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
     timings = {}
 
-    def t(label, df):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        timings[label] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     t("semdedup", semdedup(emb, n_cells=16, min_cosine=0.45))
     t("ann_bruteforce", brute_force_topk(emb, qv, k=10))
@@ -435,14 +431,7 @@ def bench_graph(spark, orders_path: str) -> dict[str, float]:
     o = spark.read.parquet(orders_path)
     timings = {}
 
-    def t(label, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[label] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     aa_edges = o.select(
         (F.col("o_custkey") % 4000).alias("src"),
@@ -510,14 +499,7 @@ def bench_round5(spark) -> tuple[dict, dict]:
     timings: dict[str, dict[int, float]] = {}
     fuzzy_obs: dict[int, dict[str, int]] = {}
 
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     for factor in (1, 10):
         n = 500_000 * factor
@@ -529,15 +511,15 @@ def bench_round5(spark) -> tuple[dict, dict]:
         )
         t(
             "burst_fold",
-            factor,
             lambda s=series: burst_segments(s, "k", "day", "hot"),
+            factor,
         )
         t(
             "acf_lags123",
-            factor,
             lambda s=series: autocorrelation(
                 s, key_col="k", order_col="day", value_col="value"
             ),
+            factor,
         )
 
     for factor in (1, 4, 16):
@@ -554,21 +536,20 @@ def bench_round5(spark) -> tuple[dict, dict]:
             ).alias("p_name")
         )
         obs: dict = {}
-        df = fuzzy_pairs(names, "p_name", max_dist=3, observations=obs)
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault("fuzzy_passjoin", {})[factor] = round(best, 2)
+        t(
+            "fuzzy_passjoin",
+            fuzzy_pairs(names, "p_name", max_dist=3, observations=obs),
+            factor,
+        )
         # one pass WITHOUT the histogram count filter, counters only —
         # attributes blocking power per level (segments vs +histogram)
         obs_nf: dict = {}
-        fuzzy_pairs(
-            names, "p_name", max_dist=3, observations=obs_nf,
-            hist_filter=False,
-        ).write.format("noop").mode("overwrite").save()
+        force(
+            fuzzy_pairs(
+                names, "p_name", max_dist=3, observations=obs_nf,
+                hist_filter=False,
+            )
+        )
         # exact length-band pair count from the length histogram — the
         # verify set the old length-band blocking would have produced
         hist = names.groupBy(F.length("p_name").alias("l")).count()
@@ -636,23 +617,16 @@ def bench_round7(spark) -> tuple[dict, dict]:
     timings: dict[str, dict[int, float]] = {}
     auto_info: dict[str, dict] = {}
 
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     for factor in (1, 4, 16):
         n = 2_000 * factor
         t(
             "resolve_entities_e2e",
-            factor,
             lambda n=n: resolve_entities(
                 _probe_names(spark, n), "p_name", max_dist=2
             ),
+            factor,
         )
 
     n64 = 2_000 * 64
@@ -673,7 +647,7 @@ def bench_round7(spark) -> tuple[dict, dict]:
                 recall_sample_mod=recall_mod,
             )
 
-        t(label, 64, mk)
+        t(label, mk, 64)
         # untimed counter pass: Observations bind to one action. The
         # escalated arm also measures its recall here (round-7 verdict
         # item 4): a 1/4 name sample re-runs the COMPLETE PassJoin
@@ -681,9 +655,7 @@ def bench_round7(spark) -> tuple[dict, dict]:
         # the timed wall above, as in production where the sampled
         # audit is a side observation, not the query path.
         obs2: dict = {}
-        mk(obs=obs2, recall_mod=4).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        force(mk(obs=obs2, recall_mod=4))
         auto_info[label] = {
             "decision": obs2["pair_source"],
             "candidates": int(obs2["candidates"].get["n"]),
@@ -712,12 +684,7 @@ def render_round7(result: tuple[dict, dict]) -> list[str]:
         "| op | wall by growth factor |",
         "|---|---|",
     ]
-    for label, per in r7_timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(r7_timings)
     lines += [
         "",
         "### auto pair-source decisions at x64 (128k names)",
@@ -810,14 +777,7 @@ def bench_round8(spark, li_paths: dict, docs_paths: dict) -> tuple[dict, dict]:
     timings: dict[str, dict] = {}
     extras: dict[str, dict] = {}
 
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     # --- token budget, modal quality level ---------------------------
     for factor in (1, 4, 16):
@@ -832,7 +792,7 @@ def bench_round8(spark, li_paths: dict, docs_paths: dict) -> tuple[dict, dict]:
             )
             return select_token_budget(d, budget, "q", "tokens")
 
-        t("token_budget_modal_1level", factor, mk)
+        t("token_budget_modal_1level", mk, factor)
 
     # --- dhash decode-pass count --------------------------------------
     for factor in (1, 4):
@@ -853,15 +813,15 @@ def bench_round8(spark, li_paths: dict, docs_paths: dict) -> tuple[dict, dict]:
                 yield pdf
 
         counted = ppm.mapInPandas(_count_scans, ppm.schema)
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        dhash_hamming_pairs(
-            image_dhash(counted, grid_w=8, grid_h=8),
-            bits=56, bands=4, max_hamming=3,
-        ).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        timings.setdefault("dhash_pipeline_counted", {})[factor] = round(
-            wall, 2
+        # one rep only: the accumulator counts the scans of ONE run
+        t(
+            "dhash_pipeline_counted",
+            lambda counted=counted: dhash_hamming_pairs(
+                image_dhash(counted, grid_w=8, grid_h=8),
+                bits=56, bands=4, max_hamming=3,
+            ),
+            factor,
+            reps=1,
         )
         extras[f"dhash_scans_x{factor}"] = {
             "docs": n_docs,
@@ -879,7 +839,7 @@ def bench_round8(spark, li_paths: dict, docs_paths: dict) -> tuple[dict, dict]:
             ).select("doc_a", "doc_b")
             return leakage_safe_split(docs, pairs)
 
-        t("leakage_split_minhash", factor, mk)
+        t("leakage_split_minhash", mk, factor)
 
     # --- join-view delta vs full re-join ------------------------------
     for factor in sorted(li_paths):
@@ -894,17 +854,17 @@ def bench_round8(spark, li_paths: dict, docs_paths: dict) -> tuple[dict, dict]:
 
         t(
             "join_delta_refresh",
-            factor,
             lambda li=li, ords=ords, d_li=d_li, d_or=d_or: join_view_delta(
                 li, d_li, ords, d_or, on=["okey"]
             ),
+            factor,
         )
         t(
             "join_full_rejoin",
-            factor,
             lambda li=li, ords=ords, d_li=d_li, d_or=d_or: li.unionByName(
                 d_li
             ).join(ords.unionByName(d_or), "okey"),
+            factor,
         )
     return timings, extras
 
@@ -935,12 +895,7 @@ def render_round8(result: tuple[dict, dict]) -> list[str]:
         "| op | wall by growth factor |",
         "|---|---|",
     ]
-    for label, per in r8_timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(r8_timings)
     lines += [
         "",
         "### image-dhash decode passes (fingerprint persist, round-7"
@@ -1004,14 +959,7 @@ def bench_round8b(spark, docs_paths: dict, emb_paths: dict) -> dict:
 
     timings: dict[str, dict] = {}
 
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     def pts(n, centers):
         return spark.range(n).select(
@@ -1029,39 +977,39 @@ def bench_round8b(spark, docs_paths: dict, emb_paths: dict) -> dict:
         # centers^2 grid cells ~= n/4 -> cluster size ~4 at every n
         t(
             "dbscan_fixed_density",
-            factor,
             lambda n=n: grid_dbscan(
                 pts(n, int((n / 4) ** 0.5)), eps=10, min_pts=4
             ),
+            factor,
         )
         t(
             "dbscan_growing_density",
-            factor,
             lambda n=n: grid_dbscan(pts(n, 50), eps=10, min_pts=4),
+            factor,
         )
 
     for factor in (1, 4, 16):
         docs = spark.read.parquet(docs_paths[factor])
         t(
             "jsd_drift",
-            factor,
             lambda docs=docs: jsd_source_drift(docs),
+            factor,
         )
         cap = max(1, int(0.05 * docs.count()))
         t(
             "dedup_cascade",
-            factor,
             lambda docs=docs, cap=cap: dedup_cascade_report(
                 docs, max_df=cap
             ),
+            factor,
         )
 
     for factor in (1, 4, 16):
         emb = spark.read.parquet(emb_paths[factor])
         t(
             "ndcg_at_k",
-            factor,
             lambda emb=emb: ndcg_at_k(emb, n_queries=8, k=10),
+            factor,
         )
     return timings
 
@@ -1086,12 +1034,7 @@ def render_round8b(timings: dict) -> list[str]:
         "| op | wall by growth factor |",
         "|---|---|",
     ]
-    for label, per in timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(timings)
     return lines
 
 
@@ -1112,14 +1055,7 @@ def bench_round8c(spark) -> dict:
 
     timings: dict[str, dict] = {}
 
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     for factor in (1, 4, 16):
         E = 100_000 * factor
@@ -1130,23 +1066,23 @@ def bench_round8c(spark) -> dict:
         )
         t(
             "harmonic_4seeds_3r",
-            factor,
             lambda e=edges: harmonic_centrality(
                 e, sources=[0, 1, 2, 3], rounds=3
             ),
+            factor,
         )
         t(
             "assortativity",
-            factor,
             lambda e=edges: degree_assortativity(e),
+            factor,
         )
         nodes = spark.range(V).select(
             F.col("id").alias("node"), (F.col("id") % 8).alias("community")
         )
         t(
             "modularity_mod8",
-            factor,
             lambda e=edges, n=nodes: modularity_q(e, n),
+            factor,
         )
     return timings
 
@@ -1165,12 +1101,7 @@ def render_round8c(timings: dict) -> list[str]:
         "| op | wall by growth factor |",
         "|---|---|",
     ]
-    for label, per in timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(timings)
     return lines
 
 
@@ -1197,14 +1128,7 @@ def bench_round8d(spark) -> dict:
 
     timings: dict[str, dict] = {}
 
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     for factor in (1, 4, 16):
         n = 200_000 * factor
@@ -1218,29 +1142,28 @@ def bench_round8d(spark) -> dict:
         )
         t(
             "kendall_tau_350cells",
-            factor,
             lambda dd=d: kendall_tau_b(dd, "x", "y7"),
+            factor,
         )
         t(
             "wasserstein_1k_support",
-            factor,
             lambda dd=d: wasserstein_1d(dd, "v", "g", "a", "b"),
+            factor,
         )
         t(
             "effect_sizes",
-            factor,
             lambda dd=d: effect_sizes(dd, "v", "g", "a", "b"),
+            factor,
         )
         t(
             "randomization_50reps",
-            factor,
             lambda dd=d: randomization_test(
                 dd, "v", "g", "a", "b", id_col="id", n_reps=50
             ),
+            factor,
         )
         t(
             "isotonic_100lvl",
-            factor,
             lambda dd=d: isotonic_calibration(
                 dd.select(
                     F.expr("v div 10").alias("s"),
@@ -1249,10 +1172,10 @@ def bench_round8d(spark) -> dict:
                 "s",
                 "y",
             ),
+            factor,
         )
         t(
             "target_encode_50cat",
-            factor,
             lambda dd=d: target_encode_oof(
                 dd.select("id", "x", F.col("v").cast("double").alias("t")),
                 "x",
@@ -1260,16 +1183,17 @@ def bench_round8d(spark) -> dict:
                 "id",
                 n_folds=5,
             ),
+            factor,
         )
         t(
             "hurst_8series",
-            factor,
             lambda dd=d: hurst_rs(dd, "k", "id", "v"),
+            factor,
         )
         t(
             "quadratic_fit",
-            factor,
             lambda dd=d: quadratic_fit(dd, "x", "v"),
+            factor,
         )
     return timings
 
@@ -1290,12 +1214,7 @@ def render_round8d(timings: dict) -> list[str]:
         "| op | wall by growth factor |",
         "|---|---|",
     ]
-    for label, per in timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(timings)
     return lines
 
 
@@ -1313,14 +1232,7 @@ def bench_round8e(spark) -> dict:
 
     timings: dict[str, dict] = {}
 
-    def t(label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
+    t = partial(probe, spark, timings)
 
     for factor in (1, 4, 16):
         E = 50_000 * factor
@@ -1331,15 +1243,15 @@ def bench_round8e(spark) -> dict:
         )
         t(
             "ktruss_k4",
-            factor,
             lambda e=edges: ktruss_converged(e, k=4),
+            factor,
         )
         t(
             "betweenness_4src_d4",
-            factor,
             lambda e=edges: betweenness_sample(
                 e, sources=[0, 1, 2, 3], max_depth=4
             ),
+            factor,
         )
     return timings
 
@@ -1357,12 +1269,7 @@ def render_round8e(timings: dict) -> list[str]:
         "| op | wall by growth factor |",
         "|---|---|",
     ]
-    for label, per in timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(timings)
     return lines
 
 
@@ -1405,14 +1312,7 @@ def bench_round9(spark) -> tuple[dict, dict, dict]:
 
     tails: dict[str, dict] = {}
 
-    def t(store, label, factor, mk):
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        store.setdefault(label, {})[factor] = round(best, 2)
+    t = partial(probe, spark, tails)
 
     # Warm the JVM on tiny inputs first: the first timed op of a fresh
     # session otherwise pays all of codegen/JIT (the first probe run put
@@ -1428,7 +1328,8 @@ def bench_round9(spark) -> tuple[dict, dict, dict]:
         lambda: hurst_rs(warm, "k", "id", "v"),
         lambda: hurst_rs(warm, "k", "id", "v", distributed_index=True),
     ):
-        mk().write.format("noop").mode("overwrite").save()
+        with query_scope(spark, "warm"):
+            force(mk())
 
     for factor in (1, 4, 16, 64):
         n = 200_000 * factor
@@ -1440,30 +1341,26 @@ def bench_round9(spark) -> tuple[dict, dict, dict]:
             (F.col("id") % 1024).alias("k_many"),
         )
         t(
-            tails,
             "randomization_50reps",
-            factor,
             lambda dd=d: randomization_test(
                 dd, "v", "g", "a", "b", id_col="id", n_reps=50
             ),
+            factor,
         )
         t(
-            tails,
             "hurst_8series",
-            factor,
             lambda dd=d: hurst_rs(dd, "k", "id", "v"),
+            factor,
         )
         t(
-            tails,
             "hurst_8series_distidx",
-            factor,
             lambda dd=d: hurst_rs(dd, "k", "id", "v", distributed_index=True),
+            factor,
         )
         t(
-            tails,
             "hurst_1024series",
-            factor,
             lambda dd=d: hurst_rs(dd, "k_many", "id", "v"),
+            factor,
         )
 
     ann: dict[str, dict] = {}
@@ -1490,23 +1387,22 @@ def bench_round9(spark) -> tuple[dict, dict, dict]:
         emb = spark.read.parquet(emb_path)
         idx_path = f"{WORK}/annidx_x{factor}"
         n_cells = 16 * factor
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            build_ann_index(emb, idx_path, n_cells=n_cells)
-            best = min(best, time.perf_counter() - t0)
-        ann.setdefault("index_build", {})[factor] = round(best, 2)
+        ann.setdefault("index_build", {})[factor] = round(
+            best_of(
+                spark,
+                "index_build",
+                lambda: build_ann_index(emb, idx_path, n_cells=n_cells),
+            ),
+            2,
+        )
         idx = load_ann_index(spark, idx_path)
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            ivf_topk(
-                emb, query_id=7, k=10, nprobe=2, index=idx
-            ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        ann.setdefault("prebuilt_query", {})[factor] = round(best, 2)
+        probe(
+            spark,
+            ann,
+            "prebuilt_query",
+            lambda: ivf_topk(emb, query_id=7, k=10, nprobe=2, index=idx),
+            factor,
+        )
 
     def pts(n, centers):
         return spark.range(n).select(
@@ -1553,12 +1449,7 @@ def render_round9(result: tuple[dict, dict, dict]) -> list[str]:
         "| op | wall by growth factor |",
         "|---|---|",
     ]
-    for label, per in tails.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(tails)
     r = tails.get("randomization_50reps", {})
     if 16 in r and 64 in r and 4 in r:
         lines += [
@@ -1599,12 +1490,7 @@ def render_round9(result: tuple[dict, dict, dict]) -> list[str]:
         "| stage | wall by base growth |",
         "|---|---|",
     ]
-    for label, per in ann.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(ann)
     lines += [
         "",
         "The first run of this probe CAUGHT a real layout bug: the",
@@ -1642,8 +1528,6 @@ def bench_round10(spark) -> dict:
     to max(16, int(sqrt(N))) — build should now grow ~O(n^1.5) instead
     of the quadratic linear-cell arm (161 s at x64 in round 9), and the
     prebuilt query wall should stay flat."""
-    import time
-
     from iowa_liquor_sales_spark.operators.similarity import (
         build_ann_index,
         ivf_topk,
@@ -1675,23 +1559,18 @@ def bench_round10(spark) -> dict:
         n = emb.count()
         cells = max(16, int(n**0.5))
         idx_path = f"{WORK}/annidx_sqrt_x{factor}"
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            build_ann_index(emb, idx_path)  # n_cells=None -> sqrt rule
-            best = min(best, time.perf_counter() - t0)
-        row: dict = {"n_vectors": n, "n_cells": cells, "build_s": round(best, 2)}
+        row: dict = {"n_vectors": n, "n_cells": cells}
+        build = best_of(  # n_cells=None -> sqrt rule
+            spark, "index_build", lambda: build_ann_index(emb, idx_path)
+        )
+        row["build_s"] = round(build, 2)
         idx = load_ann_index(spark, idx_path)
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            ivf_topk(
-                emb, query_id=7, k=10, nprobe=2, index=idx
-            ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        row["prebuilt_query_s"] = round(best, 2)
+        probe(
+            spark,
+            row,
+            "prebuilt_query_s",
+            lambda: ivf_topk(emb, query_id=7, k=10, nprobe=2, index=idx),
+        )
         out[factor] = row
     return out
 
@@ -1766,30 +1645,23 @@ def bench_round10b(spark, docs_paths: dict) -> dict:
     timings: dict[str, dict] = {}
     warmed: set = set()
 
-    def t(label, factor, mk):
+    def t(label, mk, factor):
         if label not in warmed:
             # untimed warm-up: the x1 cell runs first in a cold JVM and
             # would otherwise record codegen/JIT compile, not the
             # operator (first measured table read x1 SLOWER than x4)
-            spark.catalog.clearCache()
-            mk().write.format("noop").mode("overwrite").save()
+            with query_scope(spark, label):
+                force(mk())
             warmed.add(label)
         # best-of-4: the round-10 measurement box oscillates (see the
         # bench re-base adjudication in SCALE.md) and contention only
         # ever INFLATES a wall, so the minimum is the estimator
-        best = float("inf")
-        for _ in range(4):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            mk().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings.setdefault(label, {})[factor] = round(best, 2)
+        probe(spark, timings, label, mk, factor, reps=4)
 
     for factor, path in docs_paths.items():
         docs = spark.read.parquet(path)
         t(
             "paragraph_neardup",
-            factor,
             lambda d=docs: paragraph_neardup_pairs(
                 d,
                 "text",
@@ -1800,22 +1672,23 @@ def bench_round10b(spark, docs_paths: dict) -> dict:
                 min_words=3,
                 id_stride=1000,
             ),
+            factor,
         )
         t(
             "match_length_histogram",
-            factor,
             lambda d=docs: dup_span_length_histogram(
                 d, "text", "doc_id", k=5
             ),
+            factor,
         )
         t(
             "contamination_matrix",
-            factor,
             lambda d=docs: contamination_matrix(
                 d.filter(~F.col("source").isin(["src0", "src1"])),
                 d.filter(F.col("source").isin(["src0", "src1"])),
                 n=3,
             ),
+            factor,
         )
     return timings
 
@@ -1827,7 +1700,8 @@ def render_round10b(timings: dict) -> list[str]:
         "",
         "Word-salted replicated sf0.1 documents (replicas are NOT",
         "near-dups — candidates and cross-doc grams grow linearly, not",
-        "quadratically with copying), x1/x4/x16, best of 2:",
+        "quadratically with copying), x1/x4/x16, best of 4 after one",
+        "untimed warm-up run per op:",
         "",
         "| op | " + " | ".join(f"x{f}" for f in (1, 4, 16)) + " |",
         "|---|---|---|---|",
@@ -2013,12 +1887,7 @@ def render_round5(result: tuple[dict, dict]) -> list[str]:
         "| op | wall by growth factor |",
         "|---|---|",
     ]
-    for label, per in r5_timings.items():
-        lines.append(
-            f"| {label} | "
-            + ", ".join(f"x{f}: {per[f]:.2f}s" for f in sorted(per))
-            + " |"
-        )
+    lines += wall_rows(r5_timings)
     lines += [
         "",
         "### fuzzy_pairs blocking power (PassJoin segments vs length band)",

@@ -15,12 +15,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import best_of  # noqa: E402
 from iowa_liquor_sales_spark import get_spark  # noqa: E402
 from iowa_liquor_sales_spark.operators.joins import salted_join  # noqa: E402
 from scripts.scale_probe import splice  # noqa: E402
@@ -57,9 +57,9 @@ def main() -> None:
     )
 
     def run(label: str, df) -> tuple[str, float, int]:
-        t0 = time.perf_counter()
-        n = df.count()
-        return label, round(time.perf_counter() - t0, 2), n
+        rows: list[int] = []
+        secs = best_of(spark, label, lambda: rows.append(df.count()), reps=1)
+        return label, round(secs, 2), rows[0]
 
     results = []
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")

@@ -1,7 +1,10 @@
 """Driver-contract invariants that need no SparkSession: the gate order
-of ``queries()`` and the column types of every ``oracle_sql()`` entry."""
+of ``queries()``, the column types of every ``oracle_sql()`` entry, and
+the one caching idiom behind the per-query cache release."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import __spark_entry__ as entry_mod
 from tests.oracle_utils import duckdb_con
@@ -30,3 +33,19 @@ def test_no_oracle_outputs_wide_integers(sf_dir):
             if wide:
                 flagged[name] = wide
     assert not flagged, flagged
+
+
+def test_engine_persists_only_through_caching_pin():
+    # query_scope can only release what caching.pin registered: a bare
+    # .persist() in the engine would escape the pinned-relation count.
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "iowa_liquor_sales_spark"
+    files = [root / "__spark_entry__.py", *sorted(pkg.rglob("*.py"))]
+    bare = [
+        f"{f.relative_to(root)}:{i}"
+        for f in files
+        if f != pkg / "caching.py"
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if ".persist(" in line
+    ]
+    assert not bare, bare

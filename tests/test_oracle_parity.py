@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry_mod
+from iowa_liquor_sales_spark import caching
 from tests.oracle_utils import compare, duckdb_con
 
 QUERIES = entry_mod.queries()
@@ -28,8 +29,12 @@ def con(sf_dir):
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, con):
-    ok, msg = compare(QUERIES[name](spark, sf_dir), con, ORACLES[name])
+    with caching.query_scope(spark, name):
+        ok, msg = compare(QUERIES[name](spark, sf_dir), con, ORACLES[name])
     assert ok, f"{name}: {msg}"
+    # the scope left nothing cached behind for the next query
+    assert caching._PINNED == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_entry_smoke(spark):
