@@ -118,6 +118,60 @@ def test_gold_validations_pass(bronze):
     assert all(v == 0 for v in results.values()), results
 
 
+def test_gold_validations_count_violations(spark):
+    """Hand-built gold with one violation of each kind: a duplicated fact
+    PK, duplicated dim keys (S1 twice, V1 three times, which a plain
+    dim-key join would multiply into the fact), a NULL dim key, one orphan
+    per FK column, and NULL FKs, which are not violations."""
+    import datetime as dt
+
+    d1, d9 = dt.date(2021, 1, 1), dt.date(2020, 1, 1)
+    fact = spark.createDataFrame(
+        [
+            ("INV1", d1, "S1", "I1", "V1", "C1"),
+            ("INV1", d1, "S1", "I1", "V1", "C1"),  # duplicated PK
+            ("INV2", d1, "S9", "I1", "V1", "C1"),  # orphan store
+            ("INV3", d1, "S2", "I9", "V1", "C1"),  # orphan item
+            ("INV4", d1, "S1", "I1", "V9", "C1"),  # orphan vendor
+            ("INV5", d1, "S1", "I1", "V1", "C9"),  # orphan category
+            ("INV6", d9, "S1", "I1", "V1", "C1"),  # orphan date
+            ("INV7", None, None, None, None, None),  # NULL FKs
+        ],
+        "invoice_line_no string, date date, store string, itemno string, "
+        "vendor_no string, category string",
+    )
+    gold = {
+        "dim_store": spark.createDataFrame(
+            [("S1", "a"), ("S1", "b"), ("S2", "c")], "store string, name string"
+        ),
+        "dim_item": spark.createDataFrame(
+            [("I1", "x"), (None, "y")], "itemno string, im_desc string"
+        ),
+        "dim_vendor": spark.createDataFrame(
+            [("V1", "a"), ("V1", "b"), ("V1", "c")], "vendor_no string, vendor_name string"
+        ),
+        "dim_category": spark.createDataFrame(
+            [("C1", "x")], "category string, category_name string"
+        ),
+        "dim_date": spark.createDataFrame([(d1, 2021)], "date date, year int"),
+        "fact_sales": fact,
+    }
+    expected = {
+        "pk_fact": 1,
+        "pk_dim_store": 1,
+        "pk_dim_item": 0,
+        "pk_dim_vendor": 1,
+        "pk_dim_category": 0,
+        "pk_dim_date": 0,
+        "fk_store": 1,
+        "fk_itemno": 1,
+        "fk_vendor_no": 1,
+        "fk_category": 1,
+        "fk_date": 1,
+    }
+    assert list(validate_gold(gold).items()) == list(expected.items())
+
+
 def test_dim_date_pg_dow_convention(spark):
     from iowa_liquor_sales_spark.functions.dates import date_parts
 
