@@ -90,9 +90,7 @@ def main(workdir: str | None = None) -> dict[str, int]:
     # gold: star schema + validations (reference session.sql)
     gold = build_gold(spark.read.parquet(f"{work}/silver"))
     for name, df in gold.items():
-        write_parquet(
-            df, f"{work}/gold/{name}", partition_by=None if name != "fact_sales" else None
-        )
+        write_parquet(df, f"{work}/gold/{name}")
     violations = validate_gold(gold)
     assert all(v == 0 for v in violations.values()), violations
 

@@ -8,9 +8,10 @@ as one Spark submit.
 Reads staged Socrata CSV pages with the declared 24-column schema (no
 inference), runs bronze -> silver -> gold (SURVEY §3.1/§3.3: coercions
 C1-C3, star schema A1/A2/D1-D6, PK/FK validations J1/J2), writes each
-stage as parquet, and prints one JSON line of stage row counts and
-validation results. Exit code 1 if any PK/FK validation fails —
-the Spark stand-in for the reference's Postgres constraint errors.
+stage as parquet, and prints one JSON line of validation results and of
+the row counts read back from the written parquet. Exit code 1 if any
+PK/FK validation fails — the Spark stand-in for the reference's Postgres
+constraint errors.
 """
 
 from __future__ import annotations
@@ -61,11 +62,15 @@ def run_pipeline(
         write_parquet(df, f"{work}/gold/{name}", partition_by=part)
 
     violations = validate_gold(gold)
+
+    def written_rows(stage: str) -> int:
+        return spark.read.parquet(f"{work}/{stage}").count()
+
     out = {
         "workdir": work,
-        "bronze_rows": bronze.count(),
-        "silver_rows": silver_df.count(),
-        **{f"{n}_rows": df.count() for n, df in gold.items()},
+        "bronze_rows": written_rows("bronze"),
+        "silver_rows": written_rows("silver"),
+        **{f"{n}_rows": written_rows(f"gold/{n}") for n in gold},
         "violations": violations,
         "ok": all(v == 0 for v in violations.values()),
     }

@@ -11,10 +11,13 @@ Spark application with three materialization points:
   script's six INSERT ... SELECT DISTINCT ... ON CONFLICT DO NOTHING
   statements become distinct + first-wins dedup DataFrames.
 
-Scale: bronze→silver is a single narrow stage; each dim build shuffles only
-its dim's distinct attribute tuples (tiny); the fact build is a projection.
-Gold tables should be written partitioned (fact by year) and the dims are
-broadcast at query time — see operators/joins.star_join.
+Scale: bronze→silver is a single narrow stage; each of the four keyed dims
+is one aggregate on its key (one shuffle of the map-side partial minima;
+a struct minimum is sort-based, not hashed); dim_date is one distinct;
+the fact is a projection plus one window shuffle for its PK dedup.
+validate_gold is one Spark action. Gold tables should be written
+partitioned (fact by year) and the dims are broadcast at query time —
+see operators/joins.star_join.
 """
 
 from __future__ import annotations
@@ -25,7 +28,6 @@ from pyspark.sql import functions as F
 from iowa_liquor_sales_spark.functions.cleansing import to_silver
 from iowa_liquor_sales_spark.functions.dates import date_parts
 from iowa_liquor_sales_spark.operators.dedup import dedup_rank
-from iowa_liquor_sales_spark.operators.joins import fk_violations, pk_duplicates
 from iowa_liquor_sales_spark.schemas import IOWA_INT_COLS, IOWA_NUM_COLS
 
 # Dim column layouts: IowaLiquor-RDS.session.sql:85-156.
@@ -78,10 +80,26 @@ def _dim(df: DataFrame, key: str, cols: list[str]) -> DataFrame:
     """Shared dim recipe (session.sql pattern): WHERE key IS NOT NULL →
     SELECT DISTINCT cols → first-wins one-row-per-key. The winner under
     ``ON CONFLICT DO NOTHING`` is unspecified; here it is deterministic
-    (ordered by the remaining attributes) so rebuilds are idempotent."""
-    distinct = df.filter(F.col(key).isNotNull()).select(*cols).distinct()
-    tiebreak = [c for c in cols if c != key]
-    return dedup_rank(distinct, [key], tiebreak or [key])
+    (the first row in ascending, nulls-first order of the remaining
+    attributes) so rebuilds are idempotent. The minimum of the attribute
+    struct is that row, so one aggregate on the key finds it. Float zeros
+    are written as 0.0, as SELECT DISTINCT writes them: min() keeps
+    whichever of two equal zeros (0.0, -0.0) it meets first."""
+    attrs = [c for c in cols if c != key]
+    types = dict(df.dtypes)
+    first = (
+        df.filter(F.col(key).isNotNull())
+        .groupBy(key)
+        .agg(F.min(F.struct(*attrs)).alias("__first"))
+    )
+
+    def unpack(c: str):
+        col = F.col(f"__first.{c}")
+        if types[c] in ("double", "float"):
+            col = F.when(col == 0, F.lit(0).cast(types[c])).otherwise(col)
+        return col.alias(c)
+
+    return first.select(*[c if c == key else unpack(c) for c in cols])
 
 
 def dim_store(silver_df: DataFrame) -> DataFrame:
@@ -132,32 +150,51 @@ def build_gold(silver_df: DataFrame) -> dict[str, DataFrame]:
     }
 
 
+# Each dim's primary key; fact_sales carries it as an FK column of the
+# same name.
+DIM_KEYS = {
+    "dim_store": "store",
+    "dim_item": "itemno",
+    "dim_vendor": "vendor_no",
+    "dim_category": "category",
+    "dim_date": "date",
+}
+
+
 def validate_gold(gold: dict[str, DataFrame]) -> dict[str, int]:
     """PK/FK checks (reference J1/J2: Postgres constraints,
     session.sql:67-73). Returns violation counts — all zeros on a healthy
-    build. Each FK check is a broadcast anti-join: one fact scan, no
-    shuffle."""
-    fact = gold["fact_sales"]
-    out: dict[str, int] = {}
-    for name, keys in {
-        "pk_fact": ["invoice_line_no"],
-        "pk_dim_store": ["store"],
-        "pk_dim_item": ["itemno"],
-        "pk_dim_vendor": ["vendor_no"],
-        "pk_dim_category": ["category"],
-        "pk_dim_date": ["date"],
-    }.items():
-        table = gold["fact_sales" if name == "pk_fact" else name.removeprefix("pk_")]
-        out[name] = table.transform(lambda d, k=keys: pk_duplicates(d, k)).count()
-    for fk, (dim_name, dim_key) in {
-        "store": ("dim_store", "store"),
-        "itemno": ("dim_item", "itemno"),
-        "vendor_no": ("dim_vendor", "vendor_no"),
-        "category": ("dim_category", "category"),
-        "date": ("dim_date", "date"),
-    }.items():
-        violations = fk_violations(
-            fact.filter(F.col(fk).isNotNull()), gold[dim_name], fk, dim_key
-        )
-        out[f"fk_{fk}"] = violations.count()
-    return out
+    build. All 11 checks are one action that collects one row:
+
+    - each dim is grouped by its key once; that frame gives the dim's PK
+      check (keys with count > 1) and, its keys being distinct, the
+      broadcast side of the fact's FK probe, so a duplicated dim key
+      cannot multiply fact rows. For the four keyed dims both branches
+      read one shuffle (exchange reuse);
+    - the fact's PK and FK columns are left-joined to the five key sets
+      and grouped by invoice_line_no (fact_sales' PK dedup already
+      partitions by it, so this adds no shuffle), then reduced to the PK
+      check and, per FK, the rows whose non-NULL key found no dim row.
+    """
+    keys = list(DIM_KEYS.values())
+    key_counts = {dim: gold[dim].groupBy(key).count() for dim, key in DIM_KEYS.items()}
+    probe = gold["fact_sales"].select("invoice_line_no", *keys)
+    for dim, key in DIM_KEYS.items():
+        hits = key_counts[dim].select(key, F.lit(True).alias(f"__hit_{key}"))
+        probe = probe.join(F.broadcast(hits), key, "left")
+    misses = [f"fk_{k}" for k in keys]
+    per_pk = probe.groupBy("invoice_line_no").agg(
+        F.count(F.lit(1)).alias("__n"),
+        *[
+            F.count_if(F.col(k).isNotNull() & F.col(f"__hit_{k}").isNull()).alias(m)
+            for k, m in zip(keys, misses)
+        ],
+    )
+    row = per_pk.agg(
+        F.count_if(F.col("__n") > 1).alias("pk_fact"),
+        *[F.coalesce(F.sum(m), F.lit(0)).alias(m) for m in misses],
+    )
+    for dim, counts in key_counts.items():
+        row = row.crossJoin(counts.agg(F.count_if(F.col("count") > 1).alias(f"pk_{dim}")))
+    names = ["pk_fact", *(f"pk_{dim}" for dim in DIM_KEYS), *misses]
+    return {name: int(v) for name, v in zip(names, row.select(*names).collect()[0])}

@@ -5,11 +5,19 @@ dim attributes, NULL keys) and its conservation-check test style
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from pyspark.sql import functions as F
 
+from iowa_liquor_sales_spark.operators.dedup import dedup_rank
 from iowa_liquor_sales_spark.plans.iowa import (
+    DIM_CATEGORY_COLS,
+    DIM_ITEM_COLS,
+    DIM_STORE_COLS,
+    DIM_VENDOR_COLS,
+    _dim,
     build_gold,
     fact_sales,
     silver,
@@ -112,6 +120,52 @@ def test_gold_dims_and_fact(bronze):
     )
 
 
+def _assert_same_rows(got, want):
+    assert got.dtypes == want.dtypes
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_dim_winner_matches_distinct_then_rank(spark, bronze):
+    """_dim's one aggregate keeps the row that distinct + dedup_rank keeps:
+    the first under ascending, nulls-first order of the non-key columns."""
+
+    def reference(df, key, cols):
+        distinct = df.filter(F.col(key).isNotNull()).select(*cols).distinct()
+        return dedup_rank(distinct, [key], [c for c in cols if c != key])
+
+    s = silver(bronze)
+    for key, cols in [
+        ("store", DIM_STORE_COLS),
+        ("itemno", DIM_ITEM_COLS),
+        ("vendor_no", DIM_VENDOR_COLS),
+        ("category", DIM_CATEGORY_COLS),
+    ]:
+        _assert_same_rows(_dim(s, key, cols), reference(s, key, cols))
+
+    edge = spark.createDataFrame(
+        [
+            ("K1", None, 1.0),  # NULL attribute wins
+            ("K1", "a", 0.0),
+            ("K2", "a", float("nan")),  # NaN loses
+            ("K2", "a", 5.0),
+            ("K3", "a", -0.0),  # 0.0 next to -0.0
+            ("K3", "a", 0.0),
+            ("K4", "b", 0.0),
+            ("K4", "a", -0.0),  # distinct() writes this zero as 0.0
+            (None, "z", 1.0),  # NULL key is dropped
+        ],
+        "k string, a string, x double",
+    )
+    dim = _dim(edge, "k", ["k", "a", "x"])
+    _assert_same_rows(dim, reference(edge, "k", ["k", "a", "x"]))
+    got = {r["k"]: (r["a"], r["x"]) for r in dim.collect()}
+    assert got["K1"] == (None, 1.0) and got["K2"] == ("a", 5.0)
+    assert got["K3"] == ("a", 0.0) and got["K4"] == ("a", 0.0)
+    assert math.copysign(1, got["K3"][1]) == math.copysign(1, got["K4"][1]) == 1
+    assert set(got) == {"K1", "K2", "K3", "K4"}
+
+
 def test_gold_validations_pass(bronze):
     gold = build_gold(silver(bronze))
     results = validate_gold(gold)
@@ -187,7 +241,8 @@ def test_dim_date_pg_dow_convention(spark):
     assert not rows["2026-08-12"]["is_weekend"]
 
 
-def test_cli_pipeline_end_to_end(spark, tmp_path):
+def test_cli_pipeline_end_to_end(spark, tmp_path, capsys):
+    import json
     import sys
 
     sys.path.insert(0, "examples")
@@ -208,6 +263,9 @@ def test_cli_pipeline_end_to_end(spark, tmp_path):
         ]
     )
     assert rc == 0
+    out = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert out["bronze_rows"] == out["silver_rows"] == out["fact_sales_rows"] == 2000
+    assert out["dim_store_rows"] > 0 and out["dim_date_rows"] > 0
     fact = spark.read.parquet(str(tmp_path / "wh/gold/fact_sales"))
     assert fact.count() == 2000
     # hive partitioning materialized: year appears as a partition column
