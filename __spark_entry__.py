@@ -79,7 +79,7 @@ from iowa_liquor_sales_spark.functions.sums import (
     xsum,
 )
 from iowa_liquor_sales_spark.schemas import read_table
-from iowa_liquor_sales_spark.sources.readers import read_csv
+from iowa_liquor_sales_spark.sources.readers import read_csv, read_parquet
 from iowa_liquor_sales_spark.sources.writers import write_csv
 from iowa_liquor_sales_spark.streaming.events import windowed_counts_batch
 
@@ -2214,7 +2214,9 @@ def q_partition_prune(spark: SparkSession, sf: str) -> DataFrame:
         .partitionBy("o_orderpriority")
         .parquet(path)
     )
-    back = spark.read.parquet(path).filter(F.col("o_orderpriority") == "1-URGENT")
+    back = read_parquet(spark, path, o.schema).filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         dsum("o_totalprice", 2, "sum_total"),
@@ -4815,18 +4817,17 @@ def q_compaction(spark: SparkSession, sf: str) -> DataFrame:
     from iowa_liquor_sales_spark.sources.warehouse import compact
 
     cols = ["o_orderkey", "o_custkey", "o_orderstatus"]
+    src = read_table(spark, sf, "orders").select(*cols)
     path = _COMPACT_CACHE.get(sf)
     if path is None or not os.path.isdir(path):
         base = tempfile.mkdtemp(prefix="iowa_compact_")
         atexit.register(shutil.rmtree, base, ignore_errors=True)
         path = base + "/orders"
-        read_table(spark, sf, "orders").select(*cols).repartition(64).write.mode(
-            "overwrite"
-        ).parquet(path)
+        src.repartition(64).write.mode("overwrite").parquet(path)
         before, after = compact(spark, path, target_records_per_file=10**9)
         assert before >= 64 and after == 1, (before, after)
         _COMPACT_CACHE[sf] = path
-    return table_checksum(spark.read.parquet(path), cols)
+    return table_checksum(read_parquet(spark, path, src.schema), cols)
 
 
 _SCHEMA_EVO_CACHE: dict = {}

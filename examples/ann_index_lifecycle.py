@@ -34,11 +34,12 @@ def main(sf_dir: str, work_dir: str | None = None) -> dict:
         ivf_topk,
         load_ann_index,
     )
+    from iowa_liquor_sales_spark.schemas import read_table
 
     spark = get_spark(app_name="ann-index-lifecycle")
     path = (work_dir or tempfile.mkdtemp(prefix="ann_idx_")) + "/ann"
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     # hold out a delta slice to ingest later (centroid ids stay in base)
     is_delta = (F.col("vec_id") % 10 == 9) & (F.col("vec_id") >= 16)
     base, delta = emb.filter(~is_delta), emb.filter(is_delta)

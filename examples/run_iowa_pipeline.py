@@ -26,7 +26,7 @@ from iowa_liquor_sales_spark import get_spark  # noqa: E402
 from iowa_liquor_sales_spark.functions.sums import dsum  # noqa: E402
 from iowa_liquor_sales_spark.plans.iowa import build_gold, silver, validate_gold  # noqa: E402
 from iowa_liquor_sales_spark.schemas import IOWA_RAW_SCHEMA  # noqa: E402
-from iowa_liquor_sales_spark.sources.readers import read_csv  # noqa: E402
+from iowa_liquor_sales_spark.sources.readers import read_csv, read_parquet  # noqa: E402
 from iowa_liquor_sales_spark.sources.writers import write_csv, write_parquet  # noqa: E402
 
 
@@ -79,33 +79,36 @@ def main(workdir: str | None = None) -> dict[str, int]:
     pages = f"{work}/pages"
     stage_sample_pages(spark, pages)
 
+    def store(df, stage: str):
+        """Write one stage; read it back typed with the schema just written."""
+        write_parquet(df, f"{work}/{stage}")
+        return read_parquet(spark, f"{work}/{stage}", df.schema)
+
     # bronze: typed CSV scan, no inference (S1/S2)
-    bronze = read_csv(spark, pages, IOWA_RAW_SCHEMA, header=True, null_value="\\N")
-    write_parquet(bronze, f"{work}/bronze")
+    bronze = store(
+        read_csv(spark, pages, IOWA_RAW_SCHEMA, header=True, null_value="\\N"),
+        "bronze",
+    )
 
     # silver: C1-C3 coercions, one narrow stage (reference transform task)
-    silver_df = silver(spark.read.parquet(f"{work}/bronze"))
-    write_parquet(silver_df, f"{work}/silver")
+    silver_df = store(silver(bronze), "silver")
 
-    # gold: star schema + validations (reference session.sql)
-    gold = build_gold(spark.read.parquet(f"{work}/silver"))
-    for name, df in gold.items():
-        write_parquet(df, f"{work}/gold/{name}")
+    # gold: star schema + validations of the stored tables (reference session.sql)
+    gold = {name: store(df, f"gold/{name}") for name, df in build_gold(silver_df).items()}
     violations = validate_gold(gold)
     assert all(v == 0 for v in violations.values()), violations
 
     # the analytics the star schema serves: sales by category x year
-    fact = spark.read.parquet(f"{work}/gold/fact_sales")
-    cat = spark.read.parquet(f"{work}/gold/dim_category")
     report = (
-        fact.join(F.broadcast(cat), "category")
+        gold["fact_sales"]
+        .join(F.broadcast(gold["dim_category"]), "category")
         .groupBy("category_name", F.year("date").alias("year"))
         .agg(dsum("sale_dollars", 2, "total_sales"), F.count(F.lit(1)).alias("n"))
     )
     counts = {
         "bronze_rows": bronze.count(),
         "silver_rows": silver_df.count(),
-        "fact_rows": fact.count(),
+        "fact_rows": gold["fact_sales"].count(),
         "dim_store_rows": gold["dim_store"].count(),
         "report_rows": report.count(),
     }

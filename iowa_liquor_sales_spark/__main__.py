@@ -8,10 +8,11 @@ as one Spark submit.
 Reads staged Socrata CSV pages with the declared 24-column schema (no
 inference), runs bronze -> silver -> gold (SURVEY §3.1/§3.3: coercions
 C1-C3, star schema A1/A2/D1-D6, PK/FK validations J1/J2), writes each
-stage as parquet, and prints one JSON line of validation results and of
-the row counts read back from the written parquet. Exit code 1 if any
-PK/FK validation fails — the Spark stand-in for the reference's Postgres
-constraint errors.
+stage as parquet and reads it back typed with the schema it just wrote.
+Each stage is built from the stored one before it, and the PK/FK checks
+run on the stored gold tables. It prints one JSON line of validation
+results and of the stored row counts. Exit code 1 if any PK/FK validation
+fails — the Spark stand-in for the reference's Postgres constraint errors.
 """
 
 from __future__ import annotations
@@ -21,10 +22,13 @@ import json
 import sys
 import tempfile
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from iowa_liquor_sales_spark import get_spark
 from iowa_liquor_sales_spark.plans.iowa import build_gold, silver, validate_gold
 from iowa_liquor_sales_spark.schemas import IOWA_RAW_SCHEMA
-from iowa_liquor_sales_spark.sources.readers import read_csv
+from iowa_liquor_sales_spark.sources.readers import read_csv, read_parquet
 from iowa_liquor_sales_spark.sources.writers import write_parquet
 
 
@@ -42,35 +46,29 @@ def run_pipeline(
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    bronze = read_csv(spark, input_dir, IOWA_RAW_SCHEMA, header=True, null_value="\\N")
-    write_parquet(bronze, f"{work}/bronze")
+    def store(df: DataFrame, stage: str, partition_by=None) -> DataFrame:
+        write_parquet(df, f"{work}/{stage}", partition_by=partition_by)
+        return read_parquet(spark, f"{work}/{stage}", df.schema)
 
-    silver_df = silver(spark.read.parquet(f"{work}/bronze"))
-    write_parquet(silver_df, f"{work}/silver")
-
-    gold = build_gold(spark.read.parquet(f"{work}/silver"))
-    for name, df in gold.items():
-        part = (
-            ["year"]
-            if fact_partition_by_year and name == "fact_sales"
-            else None
-        )
-        if part:
-            from pyspark.sql import functions as F
-
+    bronze = store(
+        read_csv(spark, input_dir, IOWA_RAW_SCHEMA, header=True, null_value="\\N"),
+        "bronze",
+    )
+    silver_df = store(silver(bronze), "silver")
+    gold = {}
+    for name, df in build_gold(silver_df).items():
+        part = None
+        if fact_partition_by_year and name == "fact_sales":
+            part = ["year"]
             df = df.withColumn("year", F.year("date"))
-        write_parquet(df, f"{work}/gold/{name}", partition_by=part)
+        gold[name] = store(df, f"gold/{name}", part)
 
     violations = validate_gold(gold)
-
-    def written_rows(stage: str) -> int:
-        return spark.read.parquet(f"{work}/{stage}").count()
-
     out = {
         "workdir": work,
-        "bronze_rows": written_rows("bronze"),
-        "silver_rows": written_rows("silver"),
-        **{f"{n}_rows": written_rows(f"gold/{n}") for n in gold},
+        "bronze_rows": bronze.count(),
+        "silver_rows": silver_df.count(),
+        **{f"{n}_rows": df.count() for n, df in gold.items()},
         "violations": violations,
         "ok": all(v == 0 for v in violations.values()),
     }

@@ -24,9 +24,11 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from iowa_liquor_sales_spark.caching import pin
 from iowa_liquor_sales_spark.functions.vectors import cosine_similarity, dot, l2_norm
+from iowa_liquor_sales_spark.sources.readers import read_parquet
 
 
 def rh_component(j: int, k: int) -> float:
@@ -1458,6 +1460,41 @@ class AnnIndex(NamedTuple):
     pq_codes: DataFrame | None = None
 
 
+# The relations build_ann_index writes for the embeddings corpus
+# (vec_id bigint, embedding array<float>), as inferring their files gives
+# them: ``cell``, a partition directory, infers as int.
+ANN_INDEX_SCHEMAS: dict[str, T.StructType] = {
+    "centroids": T.StructType(
+        [
+            T.StructField("cid", T.LongType()),
+            T.StructField("cvec", T.ArrayType(T.FloatType())),
+        ]
+    ),
+    "assignments": T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.FloatType())),
+            T.StructField("cell", T.IntegerType()),
+        ]
+    ),
+    "pq_codebook": T.StructType(
+        [
+            T.StructField("m", T.IntegerType()),
+            T.StructField("cid", T.IntegerType()),
+            T.StructField("c", T.ArrayType(T.LongType())),
+        ]
+    ),
+    "pq_codes": T.StructType(
+        [
+            T.StructField("vid", T.LongType()),
+            T.StructField("m", T.IntegerType()),
+            T.StructField("cid", T.IntegerType()),
+            T.StructField("cell", T.IntegerType()),
+        ]
+    ),
+}
+
+
 def build_ann_index(
     embeddings: DataFrame,
     path: str,
@@ -1502,6 +1539,10 @@ def build_ann_index(
     keeps it O(N^1.5) AND keeps per-cell row counts ~sqrt(N) so
     probe-side scans stay balanced. One count() job at build time buys
     the sizing; pass ``n_cells`` explicitly to skip it.
+
+    The index is read back with :data:`ANN_INDEX_SCHEMAS`, the relations
+    of the embeddings corpus (``vec_id`` bigint, ``embedding``
+    array<float>).
     """
     spark = embeddings.sparkSession
     if n_cells is None:
@@ -1531,7 +1572,7 @@ def build_ann_index(
             "m int, cid int, c array<bigint>",
         )
         cdf.write.mode("overwrite").parquet(f"{path}/pq_codebook")
-        stored = spark.read.parquet(f"{path}/assignments")
+        stored = read_parquet(spark, f"{path}/assignments", ANN_INDEX_SCHEMAS["assignments"])
         codes.join(
             stored.select(F.col(id_col).alias("vid"), "cell"), "vid"
         ).repartition(F.col("cell")).write.mode("overwrite").partitionBy(
@@ -1541,18 +1582,20 @@ def build_ann_index(
 
 
 def load_ann_index(spark, path: str) -> AnnIndex:
-    """Open a persisted :func:`build_ann_index` directory. The PQ
-    relations are optional (indexes built with ``pq=False`` have no
-    codebook)."""
+    """Open a persisted :func:`build_ann_index` directory, each relation
+    read with its :data:`ANN_INDEX_SCHEMAS` entry. The PQ relations are
+    optional (indexes built with ``pq=False`` have no codebook)."""
     import os
+
+    def rel(name: str) -> DataFrame:
+        return read_parquet(spark, f"{path}/{name}", ANN_INDEX_SCHEMAS[name])
 
     pq_codebook = pq_codes = None
     if os.path.isdir(f"{path}/pq_codebook"):
-        pq_codebook = spark.read.parquet(f"{path}/pq_codebook")
-        pq_codes = spark.read.parquet(f"{path}/pq_codes")
+        pq_codebook, pq_codes = rel("pq_codebook"), rel("pq_codes")
     return AnnIndex(
-        centroids=spark.read.parquet(f"{path}/centroids"),
-        assignments=spark.read.parquet(f"{path}/assignments"),
+        centroids=rel("centroids"),
+        assignments=rel("assignments"),
         pq_codebook=pq_codebook,
         pq_codes=pq_codes,
     )
@@ -1609,7 +1652,8 @@ def compact_ann_index(spark, path: str) -> dict:
     instead — the rewrite step is identical). Contents are
     row-identical; only the file layout changes, so queries against the
     reloaded index are bit-identical. Compacts ``assignments`` and,
-    when present, ``pq_codes``. Returns per-relation
+    when present, ``pq_codes``, each read with its
+    :data:`ANN_INDEX_SCHEMAS` entry. Returns per-relation
     ``{files_before, files_after, rows}``.
     """
     fs, HPath = _index_fs(spark, path)
@@ -1635,7 +1679,7 @@ def compact_ann_index(spark, path: str) -> dict:
                 raise IOError(f"crash recovery failed restoring {rel_path}")
         if not fs.exists(HPath(rel_path)):
             continue
-        df = spark.read.parquet(rel_path)
+        df = read_parquet(spark, rel_path, ANN_INDEX_SCHEMAS[rel])
         rows = df.count()
         before = _n_files(rel_path)
         tmp = f"{path}/{rel}__compacting"

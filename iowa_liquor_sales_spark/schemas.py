@@ -1,17 +1,21 @@
-"""Explicit schemas (no inference in the production path).
+"""Declared schemas: every scan of a known table is typed.
 
 The reference declares its target schema once in DDL
 (``include/sql/create_table.sql:1-26``: 14 TEXT, 3 INTEGER, 5 NUMERIC,
 1 TIMESTAMP) and lets pandas infer everything at read time
 (``src/extract.py:27-31``). Here the DDL becomes a ``StructType`` handed to
-``spark.read.csv(schema=...)`` so the scan is typed from the first byte —
-schema inference over 100 TB means reading the data twice.
+the reader: ``readers.read_csv`` for the CSV pages, ``readers.read_parquet``
+for the synthetic tables (:func:`read_table`). A CSV scan is then typed from
+the first byte (inference would read the data twice), and a parquet scan
+builds its DataFrame without the Spark job that reads a footer.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from iowa_liquor_sales_spark.sources.readers import read_parquet
 
 # --- Iowa Liquor Sales flat table (reference include/sql/create_table.sql:1-26)
 # NUMERIC columns are modeled as DoubleType to match what the reference's
@@ -124,7 +128,7 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -140,13 +144,13 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
+            T.StructField("ts", T.TimestampNTZType()),
             T.StructField("user_id", T.LongType()),
             T.StructField("event_type", T.StringType()),
             T.StructField("value", T.DoubleType()),
@@ -173,38 +177,19 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table. Plain ``spark.read.parquet`` — filter/column
-    pushdown then happens automatically in every query built on top.
+    """Scan one synthetic table with its declared ``TESTDATA_SCHEMAS``
+    entry (``readers.read_parquet``): no footer is read to build the
+    DataFrame, and filter/column pushdown happens in every query built on
+    top.
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS). Depending on the
-    Spark build that surfaces either as a nanosecond ``bigint`` (when the
-    ``nanosAsLong`` legacy flag is honored) or natively as
-    ``timestamp_ntz`` (newer readers truncate ns → us themselves). Both
-    paths normalize to **TIMESTAMP_NTZ** — wall-clock, no session-zone
-    reinterpretation — which is exactly how the DuckDB oracle's naive
-    TIMESTAMP sees the same bytes, so every downstream query (and its
-    epoch-us export via ``functions.dates.epoch_us``) is independent of
-    the driver's timezone. The long path uses exact integer ``div 1000``
-    (double division would lose precision above 2^53 ns) and an NTZ
-    ``timestampadd``, never ``timestamp_micros`` (which builds an
-    instant and would re-enter zone-dependent territory).
+    The three timestamps (``orders.o_orderdate``, ``lineitem.l_shipdate``,
+    ``events.ts``) are stored without a zone and read as
+    **TIMESTAMP_NTZ**: wall-clock, no session-zone reinterpretation. That
+    is how the DuckDB oracle's naive TIMESTAMP sees the same bytes, so every
+    downstream query (and its epoch-us export via
+    ``functions.dates.epoch_us``) is independent of the driver's timezone.
     """
-    if name == "events":
-        from pyspark.sql import functions as F
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(raw.dtypes)["ts"]
-        if ts_type == "bigint":
-            return raw.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts div 1000, "
-                    "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-        return raw.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet", TESTDATA_SCHEMAS[name])
 
 
 def load_tables(

@@ -13,10 +13,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan (reference S5, src/transform.py:32) — vectorized reader,
-    row-group min/max skipping, automatic column pruning."""
-    return spark.read.parquet(path)
+def read_parquet(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Typed parquet scan (reference S5, src/transform.py:32), the parquet
+    twin of :func:`read_csv`. The caller declares the schema, so building
+    the DataFrame reads no footer: without one, Spark runs a one-task job
+    (``ParquetFileFormat.mergeSchemasInParallel``) to infer it every time.
+    Vectorized reader, row-group min/max skipping and column pruning work
+    as on an inferred scan. Hive partition columns (``cell=3/``) take their
+    type from ``schema`` and, as on any partitioned scan, come last."""
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_csv(

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from iowa_liquor_sales_spark.sources.readers import read_parquet
+
 
 def _ddl_columns(schema: T.StructType) -> str:
     return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
@@ -78,6 +80,8 @@ def compact(
     """
     import shutil
 
+    # Untyped on purpose: compact takes any directory, whose schema is
+    # unknown until a footer is read. The re-read after the swap reuses it.
     df = spark.read.parquet(path)
     n_rows = df.count()
     n_files_before = df.select(F.input_file_name()).distinct().count()
@@ -88,7 +92,7 @@ def compact(
     shutil.move(path, backup)
     shutil.move(staging, path)
     shutil.rmtree(backup)
-    after = spark.read.parquet(path)
+    after = read_parquet(spark, path, df.schema)
     assert after.count() == n_rows
     n_files_after = after.select(F.input_file_name()).distinct().count()
     return n_files_before, n_files_after

@@ -17,18 +17,26 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from iowa_liquor_sales_spark.functions.sums import dsum
 from iowa_liquor_sales_spark.schemas import TESTDATA_SCHEMAS
+
+# The declared events schema with ``ts`` as TIMESTAMP instead of the stored
+# TIMESTAMP_NTZ: ``withWatermark`` rejects an NTZ event-time column
+# (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), so the stream reads it zoned.
+EVENTS_STREAM_SCHEMA = T.StructType(
+    [
+        T.StructField("ts", T.TimestampType()) if f.name == "ts" else f
+        for f in TESTDATA_SCHEMAS["events"]
+    ]
+)
 
 
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    reader = (
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .format("parquet")
-    )
+    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)

@@ -1,6 +1,7 @@
 """Driver-contract invariants that need no SparkSession: the gate order
-of ``queries()``, the column types of every ``oracle_sql()`` entry, and
-the one caching idiom behind the per-query cache release."""
+of ``queries()``, the column types of every ``oracle_sql()`` entry, the
+one caching idiom behind the per-query cache release, and typed parquet
+scans."""
 
 from __future__ import annotations
 
@@ -35,17 +36,34 @@ def test_no_oracle_outputs_wide_integers(sf_dir):
     assert not flagged, flagged
 
 
+def _engine_lines(needle: str) -> list[tuple[str, str]]:
+    """(file, stripped line) of each line of the engine that contains
+    ``needle``: the package and the driver entry."""
+    root = Path(__file__).resolve().parents[1]
+    files = [root / "__spark_entry__.py", *sorted((root / "iowa_liquor_sales_spark").rglob("*.py"))]
+    return [
+        (str(f.relative_to(root)), line.strip())
+        for f in files
+        for line in f.read_text().splitlines()
+        if needle in line
+    ]
+
+
 def test_engine_persists_only_through_caching_pin():
     # query_scope can only release what caching.pin registered: a bare
     # .persist() in the engine would escape the pinned-relation count.
-    root = Path(__file__).resolve().parents[1]
-    pkg = root / "iowa_liquor_sales_spark"
-    files = [root / "__spark_entry__.py", *sorted(pkg.rglob("*.py"))]
     bare = [
-        f"{f.relative_to(root)}:{i}"
-        for f in files
-        if f != pkg / "caching.py"
-        for i, line in enumerate(f.read_text().splitlines(), 1)
-        if ".persist(" in line
+        hit for hit in _engine_lines(".persist(")
+        if hit[0] != "iowa_liquor_sales_spark/caching.py"
     ]
     assert not bare, bare
+
+
+def test_engine_scans_parquet_only_typed():
+    # A bare .read.parquet( infers the schema: one Spark job each time a
+    # DataFrame is built. readers.read_parquet takes the declared schema.
+    # The one exception is warehouse.compact's first read of a directory
+    # whose schema nothing declares.
+    assert _engine_lines(".read.parquet(") == [
+        ("iowa_liquor_sales_spark/sources/warehouse.py", "df = spark.read.parquet(path)")
+    ]

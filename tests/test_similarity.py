@@ -260,6 +260,10 @@ def test_prebuilt_index_bit_identical(spark, tmp_path):
     # load from a fresh reader (not the build's return) to prove the
     # round-trip through parquet, not just the in-session relations
     idx = load_ann_index(spark, str(tmp_path / "ann"))
+    # the declared index schemas are what inferring the files would give
+    assert {
+        rel: spark.read.parquet(str(tmp_path / "ann" / rel)).schema for rel in idx._fields
+    } == {rel: getattr(idx, rel).schema for rel in idx._fields}
 
     for qid, nprobe in ((0, 1), (7, 2)):
         live = ivf_topk(emb, query_id=qid, k=10, nprobe=nprobe).collect()

@@ -8,11 +8,31 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from iowa_liquor_sales_spark.caching import query_scope
 from iowa_liquor_sales_spark.operators.joins import salted_join
-from iowa_liquor_sales_spark.schemas import read_table
+from iowa_liquor_sales_spark.schemas import TESTDATA_SCHEMAS, TESTDATA_TABLES, read_table
 from iowa_liquor_sales_spark.sources.socrata import SocrataPagedDataSource
 
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.mark.parametrize(
+    "sf", [SF] + [os.path.join(os.path.dirname(SF), d) for d in ("sf0.01", "sf0.1")]
+)
+def test_declared_schemas_match_the_files(spark, sf):
+    # names, types, nullability and order: a typed scan must see exactly
+    # what inferring the footer would
+    inferred = {t: spark.read.parquet(f"{sf}/{t}.parquet").schema for t in TESTDATA_TABLES}
+    assert inferred == {t: TESTDATA_SCHEMAS[t] for t in TESTDATA_TABLES}
+
+
+def test_typed_reads_run_no_job(spark):
+    group = "test_typed_reads_run_no_job"
+    with query_scope(spark, group):
+        for t in TESTDATA_TABLES:
+            read_table(spark, SF, t)
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+    assert list(jobs) == []
 
 
 def _stage_pages(spark, out_dir: str, page_rows: int = 400) -> int:
