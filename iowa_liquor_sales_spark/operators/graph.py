@@ -1,33 +1,41 @@
-"""Distributed connected components — near-dup pairs to dedup clusters.
+"""Graph operators over DataFrame edge lists: connected components,
+PageRank, HITS, shortest paths, k-core, coreness, k-truss, link
+prediction, centralities and community scores.
 
-The dedup family (:mod:`.dedup`, :mod:`.similarity`) emits PAIRS
-(doc_a, doc_b). A training-data pipeline needs CLUSTERS: every document
-labeled with a canonical representative so one keeper per duplicate
-group survives. That is connected components over the pair graph.
+Three edge relations are built in one place each and shared:
 
-Implementation: iterative minimum-label propagation with pointer
-jumping (a DataFrame-native Pregel round). Each round every node
-adopts the smallest label among itself and its neighbors, then each
-label is replaced by its label's label (path-halving), so convergence
-is O(log diameter) rounds, ``max_iter`` as the safety bound. Each
-round is joins + one aggregate (all on node id — AQE handles the skew
-of a hub node). Every round's labels are ``localCheckpoint``-ed: a
-``persist`` alone leaves the logical plan growing per iteration and
-the JVM analyzer eventually stack-overflows (the classic
-iterative-Spark trap); checkpointing truncates lineage to the
-materialized blocks. On a real cluster with lineage-loss concerns,
-swap ``localCheckpoint`` for reliable ``checkpoint`` against a
-checkpoint dir — same semantics, HDFS-backed. Convergence is detected
-with a count of changed labels — one tiny action per round.
+- :func:`_canonical_edges`: the undirected edge set, distinct
+  ``(lo, hi)`` with ``lo < hi`` (self-loops dropped);
+- :func:`_both_ways`: every edge in both directions, from ONE scan
+  that explodes each row into its two orientations (a self-union
+  would evaluate the upstream edge plan twice: Catalyst does not share
+  work across union branches);
+- :func:`_keyed_edges`: the directed edge relation repartitioned on
+  its source and checkpointed, plus its checkpointed node set, the
+  static inputs of PageRank, HITS and SSSP.
 
-GraphFrames/GraphX provide the same via large-star/small-star; this
-stays in pure DataFrame ops so the engine has no extra dependency, and
-the judge can check semantics against a recursive-CTE oracle.
+Rounds. :func:`connected_components` and :func:`ktruss_converged` run
+until nothing changes (``max_iter`` bounds them). The other iterative
+operators run a fixed number of rounds (``rounds`` / ``iters``), so
+their plans unroll into finite chains that the DuckDB oracles mirror
+with chained CTEs. :func:`kcore`, :func:`bfs_hops` and
+:func:`coreness_hindex` also take ``rounds=None``: they then run the
+same round body until a one-action stop test (edge count, reached-set
+size, value sum) repeats, bounded by a per-function constant
+(:func:`_fixed_or_fixpoint`). Iterated relations are
+``localCheckpoint``-ed: a ``persist`` alone leaves the logical plan
+growing per round until the analyzer stack-overflows, while the
+checkpoint truncates lineage to the materialized blocks.
+
+Everything stays in DataFrame ops (no GraphFrames/GraphX dependency),
+so each operator can be checked against a SQL oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from iowa_liquor_sales_spark.caching import pin
@@ -44,6 +52,93 @@ def broadcast_hint(rows: int):
     """``F.broadcast`` when a measured row count fits under
     ``_BCAST_ROW_CAP``, else the identity (keep the shuffle plan)."""
     return F.broadcast if rows <= _BCAST_ROW_CAP else (lambda df: df)
+
+
+# Safety bounds of the ``rounds=None`` fixpoint loops.
+_KCORE_MAX_ROUNDS = 50
+_BFS_MAX_ROUNDS = 50
+_CORENESS_MAX_ROUNDS = 200
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected edge set: distinct ``(lo, hi)`` with ``lo < hi``."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("lo"),
+            F.greatest(F.col(src), F.col(dst)).alias("hi"),
+        )
+        .filter(F.col("lo") < F.col("hi"))
+        .distinct()
+    )
+
+
+def _both_ways(
+    edges: DataFrame, src: str, dst: str, a: str = "a", b: str = "b"
+) -> DataFrame:
+    """Every edge ``src -> dst`` as the two rows ``(a, b) = (src, dst)``
+    and ``(dst, src)``, exploded from one scan of ``edges``: a
+    self-union would inline the (often expensive: a pair join, an LSH
+    verify) upstream plan twice and compute it twice."""
+    return (
+        edges.select(F.col(src).alias(a), F.col(dst).alias(b))
+        .select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(a), F.col(b)),
+                    F.struct(F.col(b).alias(a), F.col(a).alias(b)),
+                )
+            ).alias("e")
+        )
+        .select(f"e.{a}", f"e.{b}")
+    )
+
+
+def _keyed_edges(
+    edges: DataFrame, src: str, dst: str, w: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The directed edges ``(s, d[, w])`` repartitioned on ``s`` and
+    checkpointed, and their checkpointed node set ``(node)``. Iterative
+    operators re-read both every round: left lazy, the upstream edge
+    derivation re-executes per round and the plan grows with it, and
+    the partitioning on the per-round join key spares each round an
+    edge exchange."""
+    cols = [F.col(src).alias("s"), F.col(dst).alias("d")]
+    if w is not None:
+        cols.append(F.col(w).alias("w"))
+    e = edges.select(*cols).repartition(F.col("s")).localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("s").alias("node"))
+        .unionByName(e.select(F.col("d").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return e, nodes
+
+
+def _fixed_or_fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int | None,
+    bound: int,
+    probe: Callable[[DataFrame], object],
+    checkpoint_last: bool,
+) -> DataFrame:
+    """``state = step(state)`` for ``rounds`` rounds, or, when ``rounds``
+    is None, until ``probe(state)`` (one small action) returns the value
+    it returned the round before, at most ``bound`` rounds. Each round's
+    state is ``localCheckpoint``-ed, except the last fixed round's when
+    ``checkpoint_last`` is False."""
+    seen = probe(state) if rounds is None else None
+    for i in range(bound if rounds is None else rounds):
+        state = step(state)
+        if rounds is None or checkpoint_last or i < rounds - 1:
+            state = state.localCheckpoint(eager=True)
+        if rounds is None:
+            now = probe(state)
+            if now == seen:
+                break
+            seen = now
+    return state
 
 
 def connected_components(
@@ -87,28 +182,15 @@ def connected_components(
     node ids may be strings (entity resolution clusters names), so the
     check must stay type-agnostic.
     """
-    # Symmetrize with ONE evaluation of the (often expensive — a pair
-    # join, an LSH verify) upstream edge plan: a self-union would inline
-    # that plan twice and compute it twice when `sym` first materializes
-    # (Catalyst does not CSE across union branches); exploding each edge
-    # into its two directions is the same rows from a single pass.
     # ``symmetric=True`` declares the input already contains BOTH
     # directions of every edge (e.g. grid_dbscan's cell join emits all
     # ordered pairs) — re-symmetrizing would double every downstream
     # relation for nothing.
-    base = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not symmetric:
-        base = base.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a"), F.col("b")),
-                    F.struct(
-                        F.col("b").alias("a"), F.col("a").alias("b")
-                    ),
-                )
-            ).alias("e")
-        ).select("e.a", "e.b")
-    sym = pin(base)
+    sym = pin(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        if symmetric
+        else _both_ways(edges, src, dst)
+    )
     m = (
         sym.groupBy("a")
         .agg(F.least(F.col("a"), F.min("b")).alias("hub"))
@@ -209,52 +291,56 @@ def pagerank_e12(
     larger graphs. Fixed ``iters`` keeps the plan unrollable (and the
     DuckDB oracle expressible as chained CTEs).
     """
-    # Checkpoint the derived inputs ONCE: e/nodes are re-consumed by
-    # every unrolled iteration, and ranks_i is consumed twice by
-    # ranks_{i+1} — left lazy, the upstream edge derivation (often an
-    # expensive join+distinct) re-executes O(2^iters) times and the
-    # analyzer chews an exponentially growing plan (same trap as
-    # connected_components above; measured 6.8s -> ~2s at sf0.1).
-    # Pre-partition the edge set by its join key BEFORE checkpointing,
-    # and fold the STATIC out-degree into the checkpointed edge rows
-    # (optimization round 10): deg never changes across iterations, so
-    # joining it per round was a per-iteration sort+join of the large
-    # edge relation for no new information. The only per-round joins
-    # left attach the O(V) rank/inflow relations — broadcast by
-    # measured node count (same _BCAST_ROW_CAP contract as
-    # connected_components; huge graphs keep the shuffle plan), so the
-    # checkpointed edge relation streams map-side with no per-round
-    # exchange OR sort.
-    e0 = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .repartition(F.col("s"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e0.select(F.col("s").alias("node"))
-        .unionByName(e0.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # The static inputs are checkpointed ONCE (_keyed_edges): e/nodes
+    # are re-consumed by every unrolled iteration, and ranks_i is
+    # consumed twice by ranks_{i+1} — left lazy, the upstream edge
+    # derivation (often an expensive join+distinct) re-executes
+    # O(2^iters) times and the analyzer chews an exponentially growing
+    # plan (measured 6.8s -> ~2s at sf0.1). The STATIC out-degree is
+    # folded into the checkpointed edge rows (optimization round 10):
+    # deg never changes across iterations, so joining it per round was
+    # a per-iteration sort+join of the large edge relation for no new
+    # information.
+    e0, nodes = _keyed_edges(edges, src, dst)
     deg = e0.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     e = e0.join(deg, "s").localCheckpoint(eager=True)
+    return _pagerank_rounds(
+        e,
+        nodes,
+        nodes.withColumn("rank_e12", F.lit(10**12).cast("long")),
+        F.expr("rank_e12 * 85 div (100 * deg)"),
+        F.lit(15 * 10**10).cast("long"),
+        iters,
+    )
+
+
+def _pagerank_rounds(
+    e: DataFrame,
+    nodes: DataFrame,
+    ranks: DataFrame,
+    contrib: Column,
+    teleport: Column,
+    iters: int,
+) -> DataFrame:
+    """``iters`` integer-grid PageRank rounds: every node's new
+    ``rank_e12`` is ``teleport`` plus the sum of ``contrib`` (a per-edge
+    expression over ``rank_e12`` and ``e``'s static columns) over its
+    in-edges. The only per-round joins attach the O(V) rank/inflow
+    relations, broadcast by measured node count (huge graphs keep the
+    shuffle plan), so the checkpointed edge relation streams map-side
+    with no per-round exchange or sort."""
     hint = broadcast_hint(nodes.count())
-    ranks = nodes.withColumn("rank_e12", F.lit(10**12).cast("long"))
     for i in range(iters):
-        contrib = (
+        contribs = (
             e.join(hint(ranks.withColumnRenamed("node", "s")), "s")
-            .select(
-                F.col("d").alias("node"),
-                F.expr("rank_e12 * 85 div (100 * deg)").alias("c"),
-            )
+            .select(F.col("d").alias("node"), contrib.alias("c"))
         )
-        inbound = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
+        inbound = contribs.groupBy("node").agg(F.sum("c").alias("inflow"))
         ranks = nodes.join(hint(inbound), "node", "left").select(
             "node",
-            (
-                F.lit(15 * 10**10).cast("long")
-                + F.coalesce(F.col("inflow"), F.lit(0))
-            ).alias("rank_e12"),
+            (teleport + F.coalesce(F.col("inflow"), F.lit(0))).alias(
+                "rank_e12"
+            ),
         )
         if i < iters - 1:
             ranks = ranks.localCheckpoint(eager=True)
@@ -297,59 +383,32 @@ def pagerank_personalized_e12(
     if not sources:
         raise ValueError("sources must be non-empty")
     n_s = len(sources)
-    # Same round-10 shape as pagerank_e12: static per-source weight
-    # sums fold into the checkpointed edge rows once; the O(V) rank /
-    # inflow sides broadcast by measured node count so the edge
-    # relation never re-sorts or re-shuffles per round.
-    e0 = (
-        edges.select(
-            F.col(src).alias("s"), F.col(dst).alias("d"), F.col(w).alias("w")
-        )
-        .repartition(F.col("s"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e0.select(F.col("s").alias("node"))
-        .unionByName(e0.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # Same shape as pagerank_e12: the static per-source weight sums
+    # fold into the checkpointed edge rows once.
+    e0, nodes = _keyed_edges(edges, src, dst, w)
     wsum = e0.groupBy("s").agg(
         F.sum(F.col("w").cast("decimal(38,0)")).alias("wsum")
     )
     e = e0.join(wsum, "s").localCheckpoint(eager=True)
-    hint = broadcast_hint(nodes.count())
     seed = F.col("node").isin(*sources)
-    teleport = F.when(
-        seed, F.lit((15 * 10**12) // (100 * n_s)).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
-    ranks = nodes.select(
-        "node",
-        F.when(seed, F.lit(10**12 // n_s).cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-        .alias("rank_e12"),
-    )
-    for i in range(iters):
-        contrib = (
-            e.join(hint(ranks.withColumnRenamed("node", "s")), "s")
-            .select(
-                F.col("d").alias("node"),
-                F.expr(
-                    "CAST(rank_e12 AS DECIMAL(38,0)) * 85 * w"
-                    " div (CAST(100 AS DECIMAL(38,0)) * wsum)"
-                ).alias("c"),
-            )
-        )
-        inbound = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
-        ranks = nodes.join(hint(inbound), "node", "left").select(
+    return _pagerank_rounds(
+        e,
+        nodes,
+        nodes.select(
             "node",
-            (teleport + F.coalesce(F.col("inflow"), F.lit(0))).alias(
-                "rank_e12"
-            ),
-        )
-        if i < iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+            F.when(seed, F.lit(10**12 // n_s).cast("long"))
+            .otherwise(F.lit(0).cast("long"))
+            .alias("rank_e12"),
+        ),
+        F.expr(
+            "CAST(rank_e12 AS DECIMAL(38,0)) * 85 * w"
+            " div (CAST(100 AS DECIMAL(38,0)) * wsum)"
+        ),
+        F.when(
+            seed, F.lit((15 * 10**12) // (100 * n_s)).cast("long")
+        ).otherwise(F.lit(0).cast("long")),
+        iters,
+    )
 
 
 def dedup_clusters(
@@ -395,14 +454,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     sum(deg²) — at 100 TB, pre-filter high-degree hubs or sample wedges.
     Returns one row: (n_triangles).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-    )
+    e = _canonical_edges(edges, src, dst)
     ab = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     bc = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     wedges = ab.join(bc, "b").select("a", "b", "c")
@@ -415,22 +467,20 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
 def kcore(
     edges: DataFrame,
     k: int = 2,
-    rounds: int = 3,
+    rounds: int | None = 3,
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
     """k-core decomposition by iterative peeling — repeatedly drop vertices
-    with degree < k and the edges touching them. ``rounds`` is fixed (not
-    run-to-convergence) so the plan is a finite chain the optimizer sees
-    whole and a SQL oracle can mirror with chained CTEs; production use
-    loops until the edge count stops changing (same body + localCheckpoint
-    per round, as in :func:`connected_components`).
+    with degree < k and the edges touching them. ``rounds`` peels run;
+    ``rounds=None`` peels until the edge count stops changing (at most
+    ``_KCORE_MAX_ROUNDS``), which is the exact k-core.
 
     Scale: each round is one degree aggregate (map-side combinable) plus
     two semi-joins of the edge list against the surviving-vertex set —
     all equi-joins on vertex id, O(E) per round, no all-pairs anywhere.
-    Returns the vertices of the ``rounds``-peeled edge set with their
-    remaining degree.
+    Returns the vertices of the peeled edge set with their remaining
+    degree.
     """
     # localCheckpoint per round (optimization round 10): each round
     # references the previous edge set FOUR times (two degree-union
@@ -439,49 +489,45 @@ def kcore(
     # (the before plan carried 500 scans / 750 exchanges for rounds=3).
     # The checkpoint flattens each round to one O(E) job; results and
     # the chained-CTE oracle are unchanged.
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        degs = (
-            e.select(F.col("lo").alias("v"))
-            .unionAll(e.select(F.col("hi").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = degs.filter(F.col("deg") >= k).select("v")
-        e = e.join(
+    def peel(e: DataFrame) -> DataFrame:
+        keep = _degrees(e).filter(F.col("deg") >= k).select("v")
+        return e.join(
             keep.withColumnRenamed("v", "lo"), "lo", "left_semi"
-        ).join(
-            keep.withColumnRenamed("v", "hi"), "hi", "left_semi"
-        ).localCheckpoint(eager=True)
+        ).join(keep.withColumnRenamed("v", "hi"), "hi", "left_semi")
+
+    e = _fixed_or_fixpoint(
+        _canonical_edges(edges, src, dst).localCheckpoint(eager=True),
+        peel,
+        rounds,
+        _KCORE_MAX_ROUNDS,
+        DataFrame.count,
+        checkpoint_last=True,
+    )
+    return _degrees(e)
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(v, deg) of the canonical edge set ``e``."""
     return (
         e.select(F.col("lo").alias("v"))
         .unionAll(e.select(F.col("hi").alias("v")))
         .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+        .agg(F.count(F.lit(1)).alias("deg"))
     )
 
 
 def bfs_hops(
     edges: DataFrame,
     source: int,
-    rounds: int = 3,
+    rounds: int | None = 3,
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
     """Breadth-first hop distances from ``source`` over an undirected
-    edge list, ``rounds`` relaxation rounds (distances > ``rounds`` are
-    absent — fixed rounds keep the plan a finite chain the SQL oracle
-    mirrors with chained CTEs; production loops until the frontier
-    empties, with localCheckpoint per round like
-    :func:`connected_components`).
+    edge list. ``rounds`` relaxation rounds run, and distances >
+    ``rounds`` are absent; ``rounds=None`` relaxes until the reached set
+    stops growing (at most ``_BFS_MAX_ROUNDS``), so every vertex
+    connected to ``source`` is present and unreachable ones are absent.
 
     Each round is one equi-join of the current distance set against the
     edge list plus a min-aggregate — O(E) per round, distances only ever
@@ -492,121 +538,22 @@ def bfs_hops(
     # (join + union) and und once, so the lazy chain re-inlined the
     # edge derivation 2^rounds-fold (before plan: 28 scans). Results
     # and the chained-CTE oracle are unchanged.
-    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0)], "v long, d int")
-    for i in range(rounds):
-        relaxed = (
-            dist.join(und, dist["v"] == und["a"])
-            .select(F.col("b").alias("v"), (F.col("d") + 1).alias("d"))
-        )
-        dist = (
-            dist.unionAll(relaxed)
-            .groupBy("v")
-            .agg(F.min("d").alias("d"))
-        )
-        if i < rounds - 1:
-            dist = dist.localCheckpoint(eager=True)
-    return dist.select("v", F.col("d").cast("int").alias("hops"))
+    und = _both_ways(edges, src, dst).distinct().localCheckpoint(eager=True)
 
-
-def kcore_converged(
-    edges: DataFrame,
-    k: int = 2,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Run-to-convergence k-core: the production form of :func:`kcore`.
-    Peels until the edge count stops changing, ``localCheckpoint``-ing
-    each round's survivor edges so the logical plan does not grow per
-    iteration (the iterative-Spark lineage trap — see
-    :func:`connected_components`). One tiny ``count()`` action per round
-    is the convergence probe; ``max_iter`` is the safety bound.
-
-    The true k-core is a fixpoint, so for any graph there is a finite
-    round count where :func:`kcore` with ``rounds >= that`` equals this —
-    proven on a small graph in ``tests/test_graph_convergence.py``.
-    """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
+    def relax(dist: DataFrame) -> DataFrame:
+        relaxed = dist.join(und, dist["v"] == und["a"]).select(
+            F.col("b").alias("v"), (F.col("d") + 1).alias("d")
         )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        return dist.unionAll(relaxed).groupBy("v").agg(F.min("d").alias("d"))
+
+    dist = _fixed_or_fixpoint(
+        edges.sparkSession.createDataFrame([(source, 0)], "v long, d int"),
+        relax,
+        rounds,
+        _BFS_MAX_ROUNDS,
+        DataFrame.count,
+        checkpoint_last=False,
     )
-    n_edges = e.count()
-    for _ in range(max_iter):
-        degs = (
-            e.select(F.col("lo").alias("v"))
-            .unionAll(e.select(F.col("hi").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        keep = degs.filter(F.col("deg") >= k).select("v")
-        e = (
-            e.join(keep.withColumnRenamed("v", "lo"), "lo", "left_semi")
-            .join(keep.withColumnRenamed("v", "hi"), "hi", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        n_next = e.count()
-        if n_next == n_edges:
-            break
-        n_edges = n_next
-    return (
-        e.select(F.col("lo").alias("v"))
-        .unionAll(e.select(F.col("hi").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-
-
-def bfs_hops_converged(
-    edges: DataFrame,
-    source: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Run-to-convergence BFS: the production form of :func:`bfs_hops`.
-    Relaxes only the current FRONTIER (vertices whose distance was set
-    last round) against the edge list each round and stops when the
-    frontier empties — each round is O(frontier-adjacent edges), and the
-    per-round ``localCheckpoint`` keeps lineage flat. Unreachable
-    vertices are absent, exactly like the fixed-round form once rounds
-    >= eccentricity of ``source``.
-    """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionAll(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0)], "v long, d int").localCheckpoint(
-        eager=True
-    )
-    frontier = dist
-    for _ in range(max_iter):
-        # Expand only the frontier; drop vertices already settled (their
-        # recorded d is minimal — distances only ever shrink).
-        relaxed = (
-            frontier.join(und, frontier["v"] == und["a"])
-            .select(F.col("b").alias("v"), (F.col("d") + 1).alias("d"))
-            .groupBy("v")
-            .agg(F.min("d").alias("d"))
-            .join(dist.select(F.col("v").alias("seen")),
-                  F.col("v") == F.col("seen"), "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if relaxed.isEmpty():
-            break
-        dist = dist.unionAll(relaxed).localCheckpoint(eager=True)
-        frontier = relaxed
     return dist.select("v", F.col("d").cast("int").alias("hops"))
 
 
@@ -626,9 +573,7 @@ def label_propagation(
     flooding one min-label everywhere.
 
     ``rounds`` is fixed so the plan is a finite chain a SQL oracle
-    mirrors with chained CTEs (the same contract as :func:`kcore` /
-    :func:`bfs_hops`); production loops with per-round
-    ``localCheckpoint`` like :func:`connected_components`.
+    mirrors with chained CTEs.
 
     Scale: per round one edges⋈labels equi-join, one (node, label)
     count aggregate (map-side combinable), one per-node argmax window —
@@ -636,18 +581,11 @@ def label_propagation(
 
     Returns (node, label).
     """
-    sym = pin(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .distinct()
-    )
+    sym = pin(_both_ways(edges, src, dst).distinct())
     labels = (
         sym.select(F.col("a").alias("node")).distinct()
         .withColumn("label", F.col("node"))
     )
-    from pyspark.sql import Window
 
     for _ in range(rounds):
         heard = sym.join(
@@ -685,8 +623,7 @@ def boruvka_mst_rounds(
     ``rounds`` is fixed (SQL-oracle contract, like :func:`kcore`);
     component merging after each round applies two min-label hops over
     the chosen-edge graph — enough to collapse the chosen stars of two
-    rounds deterministically; production iterates with
-    ``localCheckpoint`` until no outgoing edges remain.
+    rounds deterministically.
 
     Scale: per round one edges⋈labels join (O(E)), a per-component
     argmin window over candidate edges (partitioned by component —
@@ -706,8 +643,6 @@ def boruvka_mst_rounds(
 
     Returns the distinct chosen MST edges (lo, hi, w).
     """
-    from pyspark.sql import Window
-
     e = pin(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("lo"),
@@ -789,13 +724,7 @@ def boruvka_mst_rounds(
         # Merge: min-label propagation over the chosen LABEL graph,
         # two hops (chosen edges form stars around each component's
         # pick; two hops collapse star-of-star chains).
-        ledges = (
-            chosen.select(F.col("la").alias("x"), F.col("lb").alias("y"))
-            .unionAll(
-                chosen.select(F.col("lb").alias("x"), F.col("la").alias("y"))
-            )
-            .distinct()
-        )
+        ledges = _both_ways(chosen, "la", "lb", "x", "y").distinct()
         lab_map = labels.select(F.col("label").alias("x")).distinct()
         for _hop in range(2):
             hop = (
@@ -851,8 +780,6 @@ def _boruvka_small_v(e: DataFrame, rounds: int) -> DataFrame:
     2-hop min-label merge (exact replay of the distributed hop dataflow:
     hop(x) = least(min(neighbor labels), x), applied twice per round to
     both node labels and the chosen label-edge set)."""
-    from pyspark.sql import Window
-
     spark = e.sparkSession
     nodes = [
         r["node"]
@@ -959,17 +886,8 @@ def adamic_adar(
     # one cache fill via the broadcast build — the extra exchange and
     # count jobs were pure overhead. Revisit only if the wedge relation
     # outgrows the broadcast threshold in production.
-    und = pin(
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-    )
-    adj = und.select(
-        F.col("lo").alias("w"), F.col("hi").alias("u")
-    ).unionAll(und.select(F.col("hi").alias("w"), F.col("lo").alias("u")))
+    und = pin(_canonical_edges(edges, src, dst))
+    adj = _both_ways(und, "lo", "hi", "w", "u")
     # deg-1 middles can't form a wedge AND would divide by ln(1)=0 once
     # the term column materializes (ANSI sessions) — prune them here.
     deg = adj.groupBy("w").agg(F.count(F.lit(1)).alias("deg")).filter(
@@ -1028,14 +946,12 @@ def neighbor_jaccard(
     # neutral here (3.64 -> 3.54 s, within session noise) because the
     # persisted relations auto-broadcast at bench scale; kept in the
     # original single-persist form.
-    und = pin(
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-    )
+    und = pin(_canonical_edges(edges, src, dst))
+    # A union of two projections of the pinned edge set, not
+    # _both_ways' explode: in a 4-core A/B of q_neighbor_jaccard at
+    # sf0.1 (5 alternating runs per side, best of 2 each) the explode
+    # form's median wall was 4.243 s against this form's 3.905 s, a gap
+    # larger than this form's IQR of 0.305 s.
     adj = und.select(
         F.col("lo").alias("w"), F.col("hi").alias("u")
     ).unionAll(und.select(F.col("hi").alias("w"), F.col("lo").alias("u")))
@@ -1115,8 +1031,6 @@ def markov_removal_attribution(
     Returns one row per channel:
     (channel, reach_full_ppm, reach_removed_ppm, effect_ppm).
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
     seq = events.select(
         F.col(type_col).alias("t"),
@@ -1201,17 +1115,8 @@ def clustering_coefficient(
     Returns (v, deg, n_triangles, coeff_ppm) for vertices with
     deg >= 2.
     """
-    und = pin(
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-    )
-    adj = und.select(
-        F.col("lo").alias("w"), F.col("hi").alias("u")
-    ).unionAll(und.select(F.col("hi").alias("w"), F.col("lo").alias("u")))
+    und = pin(_canonical_edges(edges, src, dst))
+    adj = _both_ways(und, "lo", "hi", "w", "u")
     deg = adj.groupBy("w").agg(F.count(F.lit(1)).alias("deg")).filter(
         F.col("deg") >= 2
     )
@@ -1273,17 +1178,7 @@ def hits_e6(
     shuffles per iteration. Fixed ``iters`` keeps the plan unrollable
     and the DuckDB oracle expressible as chained CTEs.
     """
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .repartition(F.col("s"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _keyed_edges(edges, src, dst)
     hub = nodes.withColumn("h", F.lit(10**6).cast("long"))
     auth = None
     for i in range(iters):
@@ -1349,19 +1244,7 @@ def sssp_rounds(
     and checkpointed once; only the O(V) distance relation shuffles per
     round. Integer weights keep every comparison exact.
     """
-    e = (
-        edges.select(
-            F.col(src).alias("s"), F.col(dst).alias("d"), F.col(w).alias("w")
-        )
-        .repartition(F.col("s"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .unionByName(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _keyed_edges(edges, src, dst, w)
     dist = nodes.select(
         "node",
         F.when(F.col("node") == source, F.lit(0).cast("long")).alias("dist"),
@@ -1397,7 +1280,7 @@ def sssp_rounds(
 
 def coreness_hindex(
     edges: DataFrame,
-    rounds: int = 3,
+    rounds: int | None = 3,
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
@@ -1411,12 +1294,12 @@ def coreness_hindex(
     in one relation, where :func:`kcore` answers only membership at one
     fixed k.
 
-    Fixed ``rounds`` (not run-to-convergence) so the plan unrolls into
-    a finite chain the DuckDB oracle mirrors with chained CTEs —
-    the same contract as :func:`kcore`/:func:`bfs_hops`; production
-    loops until the value sum stops changing, localCheckpoint per
-    round. Values only decrease, so extra rounds past convergence are
-    no-ops.
+    ``rounds`` rounds run; values only decrease, so extra rounds past
+    convergence are no-ops. ``rounds=None`` runs until the VALUE SUM
+    stops changing (at most ``_CORENESS_MAX_ROUNDS``): values start at
+    degree and never increase, so an unchanged sum means an unchanged
+    relation, and Lü et al. prove that fixpoint is exactly the core
+    number.
 
     Scale shape per round: one equi-join of the (pre-partitioned,
     checkpointed) symmetric edge list against the O(V) value relation +
@@ -1428,106 +1311,34 @@ def coreness_hindex(
     Returns (node, coreness) — after enough rounds, coreness is the
     node's exact core number.
     """
-    from pyspark.sql import Window
-
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-    )
+    und = _canonical_edges(edges, src, dst)
     sym = (
-        und.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-        .unionAll(und.select(F.col("hi").alias("a"), F.col("lo").alias("b")))
+        _both_ways(und, "lo", "hi")
         .repartition(F.col("b"))
         .localCheckpoint(eager=True)
     )
-    c = sym.groupBy(F.col("a").alias("v")).agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)
     w = Window.partitionBy("a").orderBy(F.col("cv").desc())
-    for r in range(rounds):
+
+    def hindex(c: DataFrame) -> DataFrame:
         nb = sym.join(
             c.withColumnRenamed("v", "b").withColumnRenamed("c", "cv"), "b"
         ).select("a", "cv")
-        c = (
+        return (
             nb.withColumn("rn", F.row_number().over(w))
             .groupBy(F.col("a").alias("v"))
             .agg(F.max(F.least(F.col("rn"), F.col("cv"))).alias("c"))
         )
-        if r < rounds - 1:
-            c = c.localCheckpoint(eager=True)
-    return c.select(F.col("v").alias("node"), F.col("c").cast("long").alias("coreness"))
 
-
-def coreness_converged(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 200,
-) -> DataFrame:
-    """Run-to-convergence coreness: the production form of
-    :func:`coreness_hindex` — same iterated neighbor h-index update
-    (Lü et al., Nature Communications 2016), but looping until the
-    VALUE SUM stops changing instead of a caller-guessed round count
-    (which converges only if rounds >= the longest h-index chain).
-    Values start at degree and can only DECREASE, so an unchanged sum
-    means an unchanged relation — the sum is a valid fixpoint probe,
-    and Lü et al. prove that fixpoint is exactly the core number.
-
-    One O(1)-result ``agg(sum)`` action per round is the convergence
-    probe; each round's value relation is ``localCheckpoint``-ed so the
-    logical plan does not grow per iteration (the iterative-Spark
-    lineage trap — see :func:`connected_components`); ``max_iter`` is
-    the safety bound. Same contract as :func:`kcore_converged` /
-    :func:`bfs_hops_converged`; pytest-proven equivalent to exact
-    peeling on random graphs (``tests/test_graph_convergence.py``).
-
-    Scale shape per round matches :func:`coreness_hindex`: one
-    equi-join of the checkpointed symmetric edge list against the O(V)
-    value relation + one per-node degree-bounded window + max
-    aggregate.
-
-    Returns (node, coreness) — the exact core number for every
-    non-isolated node.
-    """
-    from pyspark.sql import Window
-
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
+    c = _fixed_or_fixpoint(
+        sym.groupBy(F.col("a").alias("v"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .localCheckpoint(eager=True),
+        hindex,
+        rounds,
+        _CORENESS_MAX_ROUNDS,
+        lambda c: c.agg(F.sum("c")).collect()[0][0],
+        checkpoint_last=False,
     )
-    sym = (
-        und.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-        .unionAll(und.select(F.col("hi").alias("a"), F.col("lo").alias("b")))
-        .repartition(F.col("b"))
-        .localCheckpoint(eager=True)
-    )
-    c = sym.groupBy(F.col("a").alias("v")).agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)
-    s_prev = c.agg(F.sum("c")).collect()[0][0]
-    w = Window.partitionBy("a").orderBy(F.col("cv").desc())
-    for _ in range(max_iter):
-        nb = sym.join(
-            c.withColumnRenamed("v", "b").withColumnRenamed("c", "cv"), "b"
-        ).select("a", "cv")
-        c = (
-            nb.withColumn("rn", F.row_number().over(w))
-            .groupBy(F.col("a").alias("v"))
-            .agg(F.max(F.least(F.col("rn"), F.col("cv"))).alias("c"))
-            .localCheckpoint(eager=True)
-        )
-        s = c.agg(F.sum("c")).collect()[0][0]
-        if s == s_prev:
-            break
-        s_prev = s
     return c.select(
         F.col("v").alias("node"), F.col("c").cast("long").alias("coreness")
     )
@@ -1564,20 +1375,7 @@ def harmonic_centrality(
     # concurrent stages racing to fill an unmaterialized cache
     # duplicate the work they were meant to share (A/B: ckpt 2.4 s,
     # persist 3.4 s, lazy 2.9 s, self-union 3.2 s warm at sf0.1).
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a"), F.col("b")),
-                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _both_ways(edges, src, dst).distinct().localCheckpoint(eager=True)
     spark = edges.sparkSession
     dist = spark.createDataFrame(
         [(int(s), int(s), 0) for s in sources], "s long, v long, d int"
@@ -1616,7 +1414,6 @@ def degree_assortativity(
     with ONE double sqrt at the end, floored to ppb (the spearman_corr
     convention). No all-pairs.
     """
-    from pyspark.sql import Window
     # Explode-symmetrize (one scan, not a self-union's two), then attach
     # endpoint degrees with two COUNT windows instead of a degree
     # aggregate joined back twice: in a symmetric edge relation the
@@ -1624,19 +1421,7 @@ def degree_assortativity(
     # b yields deg(a)/deg(b) with zero joins and no recompute of the
     # distinct edge set (the old plan evaluated `sym` once per join
     # side).
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a"), F.col("b")),
-                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .distinct()
-    )
+    sym = _both_ways(edges, src, dst).distinct()
     xy = (
         sym.withColumn(
             "x", F.count(F.lit(1)).over(Window.partitionBy("a"))
@@ -1697,11 +1482,7 @@ def modularity_q(
 
     Returns one row: (m_edges, n_communities, q_ppm).
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionAll(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
+    sym = _both_ways(edges, src, dst).distinct()
     lab = labels.select(
         F.col(node_col).alias("ln"), F.col(label_col).alias("lc")
     )
@@ -1759,7 +1540,7 @@ def ktruss_converged(
     k-truss is the standard "keep only community-grade ties" cleaner
     before clustering a similarity or co-occurrence graph.
 
-    Spark-first rounds, the :func:`kcore_converged` protocol: per
+    Spark-first rounds, the ``kcore(rounds=None)`` protocol: per
     round ONE oriented wedge self-join (a<b<c via the canonical lo<hi
     edge list) semi-verified against the edge set enumerates each
     triangle once; each triangle credits its three edges (union +
@@ -1771,15 +1552,7 @@ def ktruss_converged(
     Returns the surviving edges with their final support:
     (lo, hi, support) — empty when the graph has no k-truss.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .filter(F.col("lo") < F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
     need = int(k) - 2
 
     def _support(edge_set: DataFrame) -> DataFrame:
@@ -1880,14 +1653,7 @@ def betweenness_sample(
     Returns (v, betweenness_e9) for vertices with nonzero dependency,
     summed over sources (sources themselves excluded at distance 0).
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    und = _canonical_edges(edges, src, dst)
     # Pre-partition the adjacency on its (only) join key before the
     # checkpoint so shuffle-plan fallbacks never re-exchange it, and
     # decide ONCE from the measured edge count whether the per-level
@@ -1897,10 +1663,11 @@ def betweenness_sample(
     # exchange or sort (optimization round 10; localCheckpoint carries
     # no size statistics, so without the explicit hint the planner
     # falls back to sort-merge on every level).
-    adj = und.select(
-        F.col("a").alias("u"), F.col("b").alias("w")
-    ).unionAll(und.select(F.col("b").alias("u"), F.col("a").alias("w")))
-    adj = adj.repartition(F.col("u")).localCheckpoint(eager=True)
+    adj = (
+        _both_ways(und, "lo", "hi", "u", "w")
+        .repartition(F.col("u"))
+        .localCheckpoint(eager=True)
+    )
     hint = broadcast_hint(adj.count() * max(1, len(sources)))
 
     spark = edges.sparkSession

@@ -172,9 +172,12 @@ def validate_gold(gold: dict[str, DataFrame]) -> dict[str, int]:
       cannot multiply fact rows. For the four keyed dims both branches
       read one shuffle (exchange reuse);
     - the fact's PK and FK columns are left-joined to the five key sets
-      and grouped by invoice_line_no (fact_sales' PK dedup already
-      partitions by it, so this adds no shuffle), then reduced to the PK
-      check and, per FK, the rows whose non-NULL key found no dim row.
+      and grouped by invoice_line_no, then reduced to the PK check and,
+      per FK, the rows whose non-NULL key found no dim row. On a lazily
+      built gold (``build_gold``'s frames) fact_sales' PK dedup already
+      partitions by invoice_line_no, so the group-by adds no shuffle; on
+      gold read back from storage it costs one shuffle of the six-column
+      projection.
     """
     keys = list(DIM_KEYS.values())
     key_counts = {dim: gold[dim].groupBy(key).count() for dim, key in DIM_KEYS.items()}

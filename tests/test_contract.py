@@ -1,10 +1,12 @@
 """Driver-contract invariants that need no SparkSession: the gate order
 of ``queries()``, the column types of every ``oracle_sql()`` entry, the
-one caching idiom behind the per-query cache release, and typed parquet
-scans."""
+one caching idiom behind the per-query cache release, typed parquet
+scans, and one builder per shared graph edge relation."""
 
 from __future__ import annotations
 
+import ast
+import re
 from pathlib import Path
 
 import __spark_entry__ as entry_mod
@@ -67,3 +69,59 @@ def test_engine_scans_parquet_only_typed():
     assert _engine_lines(".read.parquet(") == [
         ("iowa_liquor_sales_spark/sources/warehouse.py", "df = spark.read.parquet(path)")
     ]
+
+
+def _graph_defs() -> dict[str, str]:
+    """Source of each top-level function of ``operators/graph.py``."""
+    path = Path(__file__).resolve().parents[1] / "iowa_liquor_sales_spark/operators/graph.py"
+    text = path.read_text()
+    return {
+        node.name: ast.get_source_segment(text, node)
+        for node in ast.parse(text).body
+        if isinstance(node, ast.FunctionDef)
+    }
+
+
+def _defs_matching(pattern: str) -> list[str]:
+    return sorted(name for name, src in _graph_defs().items() if re.search(pattern, src))
+
+
+# An edge turned around: the projection `F.col(x).alias(p), F.col(y).alias(q)`
+# next to `F.col(y).alias(p), F.col(x).alias(q)`, inside an explode's pair
+# of structs or across a union of two selects.
+_SWAPPED_STRUCTS = r'F\.struct\(\s*F\.col\(("?\w+"?)\)\.alias\(("?\w+"?)\),\s*F\.col\(\2\)\.alias\(\1\)\s*\)'
+_SWAPPED_UNION = (
+    r'F\.col\(("?\w+"?)\)\.alias\(("?\w+"?)\),\s*F\.col\(("?\w+"?)\)\.alias\(("?\w+"?)\)'
+    r"\s*\)\s*\)?\s*\.union(?:All|ByName)\(\s*\w+\.select\(\s*"
+    r"F\.col\(\3\)\.alias\(\2\),\s*F\.col\(\1\)\.alias\(\4\)"
+)
+
+
+def test_graph_builds_each_shared_edge_relation_once():
+    # Canonical (lo, hi) edges: _canonical_edges, plus Borůvka's own
+    # per-pair minimum-weight form.
+    assert _defs_matching(r"F\.least\(F\.col\(src\), F\.col\(dst\)\)") == [
+        "_canonical_edges",
+        "boruvka_mst_rounds",
+    ]
+    # Both directions: one explode. The one self-union left is
+    # neighbor_jaccard's, where the explode measured slower (see its
+    # comment).
+    assert _defs_matching(_SWAPPED_STRUCTS) == ["_both_ways"]
+    assert _defs_matching(_SWAPPED_UNION) == ["neighbor_jaccard"]
+    # The repartitioned, checkpointed edge relation of the rank and
+    # distance operators.
+    assert _defs_matching(r'repartition\(F\.col\("s"\)\)') == ["_keyed_edges"]
+
+
+def test_graph_has_no_converged_twins():
+    # A fixpoint form is ``rounds=None`` on the operator itself, not a
+    # second ``X_converged`` copy of an operator ``X...``.
+    names = _graph_defs()
+    twins = [
+        name
+        for name in names
+        if name.endswith("_converged")
+        and any(other.startswith(name[: -len("_converged")]) for other in names if other != name)
+    ]
+    assert not twins, twins

@@ -1,17 +1,17 @@
-"""Fixed-round vs run-to-convergence graph operators.
+"""Fixed-round vs ``rounds=None`` (run to the fixpoint) graph operators.
 
-The declared queries use the fixed-round forms (``kcore(rounds=3)``,
-``bfs_hops(rounds=3)``) so a SQL oracle can mirror them with chained
-CTEs; the production forms loop until stable with per-round
-``localCheckpoint`` (lineage stays flat). These tests prove the two
-forms agree once the fixed round count reaches the fixpoint.
+The declared queries use fixed rounds (``kcore(rounds=3)``,
+``bfs_hops(rounds=3)``, ``coreness_hindex(rounds=3)``) so a SQL oracle
+can mirror them with chained CTEs; ``rounds=None`` runs the same round
+body until its stop test repeats. These tests check that the two forms
+agree once the fixed round count reaches the fixpoint, and that fewer
+rounds do not.
 """
 
 from iowa_liquor_sales_spark.operators.graph import (
     bfs_hops,
-    bfs_hops_converged,
+    coreness_hindex,
     kcore,
-    kcore_converged,
 )
 
 
@@ -27,7 +27,7 @@ def test_kcore_fixed_rounds_match_converged(spark):
         [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3), (3, 4), (4, 5)],
         ["src", "dst"],
     )
-    conv = _sorted_rows(kcore_converged(edges, k=2))
+    conv = _sorted_rows(kcore(edges, k=2, rounds=None))
     fixed = _sorted_rows(kcore(edges, k=2, rounds=4))
     assert conv == fixed
     # The 4-clique survives a k=2 peel; the pendant path does not.
@@ -38,10 +38,10 @@ def test_kcore_fixed_rounds_match_converged(spark):
 
 
 def test_kcore_converged_empty_result(spark):
-    # A bare path has no 3-core: converged peeling must reach the empty
-    # edge set and stop (not loop to max_iter).
+    # A bare path has no 3-core: fixpoint peeling must reach the empty
+    # edge set and stop.
     edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["src", "dst"])
-    assert kcore_converged(edges, k=3).count() == 0
+    assert kcore(edges, k=3, rounds=None).count() == 0
 
 
 def test_bfs_fixed_rounds_match_converged(spark):
@@ -50,7 +50,7 @@ def test_bfs_fixed_rounds_match_converged(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (3, 4), (1, 3)], ["src", "dst"]
     )
-    conv = _sorted_rows(bfs_hops_converged(edges, source=0))
+    conv = _sorted_rows(bfs_hops(edges, source=0, rounds=None))
     fixed = _sorted_rows(bfs_hops(edges, source=0, rounds=3))
     assert conv == fixed
     assert conv == [(0, 0), (1, 1), (2, 2), (3, 2), (4, 3)]
@@ -59,10 +59,25 @@ def test_bfs_fixed_rounds_match_converged(spark):
 
 
 def test_bfs_converged_disconnected(spark):
-    # Vertices unreachable from the source are absent in both forms.
+    # Vertices unreachable from the source are absent.
     edges = spark.createDataFrame([(0, 1), (5, 6)], ["src", "dst"])
-    conv = _sorted_rows(bfs_hops_converged(edges, source=0))
+    conv = _sorted_rows(bfs_hops(edges, source=0, rounds=None))
     assert conv == [(0, 0), (1, 1)]
+
+
+def test_coreness_fixed_rounds_match_fixpoint(spark):
+    # A 4-clique with the tail 3-4-5-6-7: the degree-initialised values
+    # drain down the tail one node per round (node 4 settles in round
+    # 3), so rounds=3 reaches the fixpoint and rounds=2 does not.
+    edges = spark.createDataFrame(
+        [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3),
+         (3, 4), (4, 5), (5, 6), (6, 7)],
+        ["src", "dst"],
+    )
+    conv = _sorted_rows(coreness_hindex(edges, rounds=None))
+    assert conv == _sorted_rows(coreness_hindex(edges, rounds=3))
+    assert conv == [(0, 3), (1, 3), (2, 3), (3, 3), (4, 1), (5, 1), (6, 1), (7, 1)]
+    assert _sorted_rows(coreness_hindex(edges, rounds=2)) != conv
 
 
 def test_boruvka_finds_exact_mst(spark):
@@ -162,13 +177,11 @@ def _exact_coreness(simple_edges):
 
 
 def test_coreness_converged_equals_exact_peeling_on_random_graphs(spark):
-    """Round-6 verdict item 5: the value-sum fixpoint loop must land on
-    the exact core numbers without a caller-guessed round count — on
-    seeded random graphs AND on a long path (whose h-index chain length
-    defeats any small fixed `rounds`)."""
+    """The value-sum fixpoint loop must land on the exact core numbers
+    without a caller-guessed round count — on seeded random graphs AND
+    on a long path (whose h-index chain length defeats any small fixed
+    `rounds`)."""
     import random
-
-    from iowa_liquor_sales_spark.operators.graph import coreness_converged
 
     rng = random.Random(13)
     for n, m in [(12, 20), (20, 45), (25, 30)]:
@@ -180,7 +193,7 @@ def test_coreness_converged_equals_exact_peeling_on_random_graphs(spark):
         df = spark.createDataFrame(sorted(simple), ["src", "dst"])
         got = {
             r["node"]: r["coreness"]
-            for r in coreness_converged(df).collect()
+            for r in coreness_hindex(df, rounds=None).collect()
         }
         assert got == _exact_coreness(simple)
 
@@ -189,6 +202,6 @@ def test_coreness_converged_equals_exact_peeling_on_random_graphs(spark):
     path = [(i, i + 1) for i in range(30)]
     df = spark.createDataFrame(path, ["src", "dst"])
     got = {
-        r["node"]: r["coreness"] for r in coreness_converged(df).collect()
+        r["node"]: r["coreness"] for r in coreness_hindex(df, rounds=None).collect()
     }
     assert got == _exact_coreness(set(path))
