@@ -855,7 +855,11 @@ def q_embed_neardup(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_ann_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
     emb = read_table(spark, sf, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
+    # vec_id is unique: collecting the filtered scan is one job over every
+    # file, where head() ran a second job whenever the first partition
+    # scanned did not hold vec_id 0 (file listing order).
+    (probe,) = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
+    qvec = [float(x) for x in probe["embedding"]]
     return brute_force_topk(emb, qvec, k=10, exclude_ids=[0]).select("vec_id", "rnk")
 
 

@@ -267,6 +267,13 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's own
+    ``CodegenMetrics`` counter; a codegen-cache hit does not count)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def best_of(spark, label: str, fn, reps: int = 2) -> float:
     """Minimum wall (s) over ``reps`` calls of ``fn()``. Each call runs in
     its own ``query_scope``: its jobs carry ``label`` and the session's

@@ -15,7 +15,11 @@ The staged warehouse is deleted on exit.
 Runs ONE JVM for the whole list (so relative numbers are comparable to a
 bench cohort's interior, not to its cold start). Each query's jobs carry
 its name as job group and description. Prints one JSON line at the end:
-{"timings": {...}, "sf_dir": ..., "reps": ...}.
+{"timings": {...}, "compiles": {...}, "sf_dir": ..., "reps": ...}.
+``compiles`` is, per query, the number of classes Janino compiled during
+its timed reps (Spark's ``CodegenMetrics`` counter); a query whose plan
+is the same on every rep compiles on its first rep only, or not at all
+when an earlier query already generated the same code.
 """
 
 from __future__ import annotations
@@ -30,7 +34,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from bench import _cpus, _make_spark, best_of, force, prepare  # noqa: E402
+from bench import _cpus, _make_spark, best_of, codegen_compiles, force, prepare  # noqa: E402
 from iowa_liquor_sales_spark.caching import query_scope  # noqa: E402
 
 
@@ -68,6 +72,7 @@ def main() -> None:
     wh, _ = prepare(spark, queries, sf_dir, cpus, timed=False)
 
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         if plan_tag:
             plan_dir = os.path.join(ROOT, ".plans", plan_tag)
@@ -79,12 +84,18 @@ def main() -> None:
                 )
             with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
                 fh.write(normalise_plan(plan, wh))
+        before = codegen_compiles(spark)
         timings[name] = round(
             best_of(spark, name, lambda: force(queries[name](spark, wh)), reps), 3
         )
-        print(f"PROFILE {name}: {timings[name]} s", flush=True)
+        compiles[name] = codegen_compiles(spark) - before
+        print(f"PROFILE {name}: {timings[name]} s, {compiles[name]} compiles", flush=True)
 
-    print(json.dumps({"timings": timings, "sf_dir": sf_dir, "reps": reps}))
+    print(
+        json.dumps(
+            {"timings": timings, "compiles": compiles, "sf_dir": sf_dir, "reps": reps}
+        )
+    )
     spark.stop()
     shutil.rmtree(wh, ignore_errors=True)
 

@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import best_of, force  # noqa: E402
+from bench import _cpus, best_of, force  # noqa: E402
 from iowa_liquor_sales_spark import get_spark  # noqa: E402
 from iowa_liquor_sales_spark.caching import query_scope  # noqa: E402
 from iowa_liquor_sales_spark.functions.sums import davg, dsum  # noqa: E402
@@ -43,7 +43,7 @@ def probe(spark, timings: dict, label: str, mk, factor=None, reps: int = 2):
     table. ``mk`` is a zero-arg callable that builds a fresh DataFrame
     per rep, or a prebuilt DataFrame that every rep re-forces (its
     build-time pins are released after the first rep). Best-of: single-
-    shot walls on a busy local[32] JVM are noisy (GC, JIT, AQE re-plan);
+    shot walls on a busy local[N] JVM are noisy (GC, JIT, AQE re-plan);
     the min is the repeatable cost."""
     run = mk if callable(mk) else (lambda: mk)
     wall = round(best_of(spark, label, lambda: force(run()), reps), 2)
@@ -1774,7 +1774,7 @@ def render_fact(per: dict) -> list[str]:
     return [
         "# SCALE — linearity probe (replicated sf0.1 fact table)",
         "",
-        "Generated by `scripts/scale_probe.py` on local[32]: `python",
+        f"Generated by `scripts/scale_probe.py` on local[{_cpus()}]: `python",
         "scripts/scale_probe.py` re-measures every section that has a probe",
         "and splices it in place; `python scripts/scale_probe.py round9",
         "round10` re-measures only the named ones. Sections without a probe",
@@ -2003,9 +2003,10 @@ def main() -> None:
     unknown = [n for n in names if n not in SECTIONS]
     if unknown:
         sys.exit(f"unknown section(s) {unknown}; choose from {list(SECTIONS)}")
+    cpus = int(_cpus())
     spark = get_spark(
-        master="local[32]",
-        shuffle_partitions=64,
+        master=f"local[{cpus}]",
+        shuffle_partitions=2 * cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "24g",

@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import best_of  # noqa: E402
+from bench import _cpus, best_of  # noqa: E402
 from iowa_liquor_sales_spark import get_spark  # noqa: E402
 from iowa_liquor_sales_spark.operators.joins import salted_join  # noqa: E402
 from scripts.scale_probe import splice  # noqa: E402
@@ -30,9 +30,10 @@ N_DIM = 30_000
 
 
 def main() -> None:
+    cpus = int(_cpus())
     spark = get_spark(
-        master="local[16]",
-        shuffle_partitions=64,
+        master=f"local[{cpus}]",
+        shuffle_partitions=4 * cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "24g",

@@ -58,3 +58,9 @@ def test_splice_handles_every_block_of_a_multi_section_render():
     out = sp.splice(DOC, "## B\n\nnew b\n\n## D\n\nd1")
     assert out == DOC.replace("b1", "new b") + "\n## D\n\nd1\n"
     assert sp.splice(out, "## B\n\nnew b\n\n## D\n\nd1") == out
+
+
+def test_fact_header_names_the_real_core_count(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    per = {1: (600, {"q_a": 1.0})}
+    assert "on local[7]:" in "\n".join(sp.render_fact(per))
